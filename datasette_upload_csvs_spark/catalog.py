@@ -16,6 +16,7 @@ from __future__ import annotations
 import re
 
 from pyspark.sql import SparkSession
+from pyspark.sql import functions as F
 
 NAME_MAP_TABLE = "_csv_name_map_"
 
@@ -54,16 +55,39 @@ def resolve_collision(spark: SparkSession, base: str, database: str | None = Non
     return name
 
 
+def insert_row(spark: SparkSession, table: str, ddl: str, row: dict) -> None:
+    """Append one row to a managed parquet table, creating it from
+    `ddl` on first use.
+
+    A parameterized INSERT … VALUES plans as a JVM LocalRelation, so the
+    append runs no Python worker (a one-row createDataFrame plans a
+    LogicalRDD over a Python RDD and pays a worker round-trip per row).
+    Values travel only as parameter markers: quotes and backslashes in
+    filenames or error text need no escaping, and None lands as NULL.
+    """
+    target = ".".join("`" + part.replace("`", "``") + "`" for part in table.split("."))
+    if not spark.catalog.tableExists(table):
+        spark.sql(f"CREATE TABLE IF NOT EXISTS {target} ({ddl}) USING parquet")
+    cols = ", ".join(f"`{c}`" for c in row)
+    markers = ", ".join(f":{c}" for c in row)
+    spark.sql(f"INSERT INTO {target} ({cols}) VALUES ({markers})", args=row)
+
+
 def register_logical_name(
     spark: SparkSession, logical: str, physical: str, database: str | None = None
 ) -> None:
     """Record the logical→physical mapping in the name-map table."""
     prefix = f"{database}." if database else ""
-    df = spark.createDataFrame(
-        [(logical, physical, database or spark.catalog.currentDatabase())],
+    insert_row(
+        spark,
+        f"{prefix}{NAME_MAP_TABLE}",
         "logical_name string, physical_name string, database_name string",
+        dict(
+            logical_name=logical,
+            physical_name=physical,
+            database_name=database or spark.catalog.currentDatabase(),
+        ),
     )
-    df.write.mode("append").saveAsTable(f"{prefix}{NAME_MAP_TABLE}")
 
 
 def lookup_physical_name(
@@ -75,7 +99,7 @@ def lookup_physical_name(
         return None
     rows = (
         spark.table(full)
-        .filter(f"logical_name = '{logical.replace(chr(39), chr(39) * 2)}'")
+        .filter(F.col("logical_name") == logical)
         .select("physical_name")
         .tail(1)
     )

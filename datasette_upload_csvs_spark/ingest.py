@@ -31,7 +31,7 @@ import threading
 import uuid
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from datasette_upload_csvs_spark import catalog as cat
@@ -428,25 +428,7 @@ def apply_types(df: DataFrame, types: dict[str, str]) -> DataFrame:
 def _append_progress(spark: SparkSession, database: str | None, row: dict) -> None:
     full = f"{database}.{PROGRESS_TABLE}" if database else PROGRESS_TABLE
     with _progress_lock:
-        df = spark.createDataFrame(
-            [
-                (
-                    row.get("id"),
-                    row.get("filename"),
-                    row.get("database_name"),
-                    row.get("table_name"),
-                    row.get("bytes_todo"),
-                    row.get("bytes_done"),
-                    row.get("rows_done"),
-                    row.get("started"),
-                    row.get("completed"),
-                    row.get("error"),
-                    row.get("seq"),
-                )
-            ],
-            _PROGRESS_SCHEMA,
-        )
-        df.write.mode("append").saveAsTable(full)
+        cat.insert_row(spark, full, _PROGRESS_SCHEMA, row)
 
 
 class _ProgressTicker:
@@ -713,8 +695,6 @@ def upload_csv(
         # observe() rides the write job: row count comes out of the
         # same scan that materializes the table — no extra pass over
         # the written data (the reference counts as it inserts, :186).
-        from pyspark.sql import Observation
-
         obs = Observation()
         typed = typed.observe(obs, F.count(F.lit(1)).alias("n"))
         typed.write.mode("errorifexists").saveAsTable(full)
@@ -841,8 +821,11 @@ def append_csv(
         for name, dtype in existing.dtypes:
             if dict(aligned.dtypes)[name] != dtype:
                 aligned = aligned.withColumn(name, F.col(name).try_cast(dtype))
-        aligned.write.mode("append").insertInto(table)
-        rows = aligned.count()
+        obs = Observation()
+        aligned.observe(obs, F.count(F.lit(1)).alias("n")).write.mode(
+            "append"
+        ).insertInto(table)
+        rows = int(obs.get["n"])
         return IngestResult(
             task_id=task_id,
             table=table,
@@ -854,6 +837,10 @@ def append_csv(
             types=types,
         )
 
+    # the batch's row count rides the swap write (observed below the
+    # union, so existing rows are not counted)
+    obs = Observation()
+    typed = typed.observe(obs, F.count(F.lit(1)).alias("n"))
     merged = existing.unionByName(typed, allowMissingColumns=True)
     # atomic-ish swap through a staging table (managed tables cannot
     # be overwritten while being read)
@@ -861,7 +848,7 @@ def append_csv(
     merged.write.mode("overwrite").saveAsTable(staging)
     spark.sql(f"DROP TABLE `{table}`")
     spark.sql(f"ALTER TABLE `{staging}` RENAME TO `{table}`")
-    rows = typed.count()
+    rows = int(obs.get["n"])
     return IngestResult(
         task_id=task_id,
         table=table,

@@ -19,7 +19,8 @@ import os
 import threading
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession  # noqa: F401
+from pyspark.sql import DataFrame, Observation, SparkSession  # noqa: F401
+from pyspark.sql import functions as F
 
 from datasette_upload_csvs_spark import ingest as batch_ingest
 
@@ -60,8 +61,12 @@ def stream_csv_to_table(
     lock = threading.Lock()
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        n = batch_df.count()
-        batch_df.write.mode("append").saveAsTable(table)
+        # the batch's row count rides its write: one scan, not two
+        obs = Observation()
+        batch_df.observe(obs, F.count(F.lit(1)).alias("n")).write.mode(
+            "append"
+        ).saveAsTable(table)
+        n = int(obs.get["n"])
         with lock:
             state["rows"] += n
             state["batches"] += 1

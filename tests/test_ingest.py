@@ -77,6 +77,12 @@ def test_weird_filename_logical_physical_mapping(spark, tmp_path):
     assert res.logical_name == "weird ~ filename here.csv"
     assert spark.catalog.tableExists(res.table)
     assert cat.lookup_physical_name(spark, "weird ~ filename here.csv") == res.table
+    # the lookup compares as a value, not through a SQL literal, so a
+    # backslash or a quote in the logical name survives
+    for logical in ("weird \\ name", "it's here"):
+        res = ingest.upload_csv(spark, path, table=logical)
+        assert res.error is None
+        assert cat.lookup_physical_name(spark, logical) == res.table
 
 
 def test_name_collision_suffixing(spark, tmp_path):
@@ -262,6 +268,61 @@ def test_error_path_leaves_completed_null(spark, tmp_path):
     prog = ingest.get_progress(spark, res.task_id)
     assert prog["error"] is not None
     assert prog["completed"] is None  # error is the sole failure marker
+
+
+def test_bookkeeping_rows_need_no_python_dataframe(spark, tmp_path, monkeypatch):
+    """Progress and name-map rows are written as JVM-local INSERTs: with
+    createDataFrame disabled, the name-map path, a collision re-upload and
+    the captured-error path all still land their bookkeeping rows, and
+    quotes, backslashes and NULLs round-trip unchanged."""
+    from pyspark.sql import SparkSession
+
+    def no_python_rows(*args, **kwargs):
+        raise AssertionError("bookkeeping row built as a Python DataFrame")
+
+    monkeypatch.setattr(SparkSession, "createDataFrame", no_python_rows)
+    path = write(tmp_path, "Guard Dogs.csv", SIMPLE)
+    first = ingest.upload_csv(spark, path)
+    second = ingest.upload_csv(spark, path)
+    empty = ingest.upload_csv(spark, write(tmp_path, "guard_empty.csv", b""))
+    assert first.error is None and second.error is None
+    assert (first.table, second.table) == ("guard_dogs", "guard_dogs_2")
+    assert empty.error is not None
+
+    progress = spark.table(ingest.PROGRESS_TABLE)
+    for res in (first, second, empty):  # the init row, then the final one
+        assert progress.filter(
+            (F.col("id") == res.task_id) & (F.col("seq") == 0)
+        ).count() == 1
+    for res in (first, second):
+        prog = ingest.get_progress(spark, res.task_id)
+        assert prog["completed"] is not None and prog["rows_done"] == 2
+        assert prog["bytes_done"] == prog["bytes_todo"] == res.bytes_todo
+    prog = ingest.get_progress(spark, empty.task_id)
+    assert prog["error"] == empty.error and prog["completed"] is None
+    mapped = {
+        r["physical_name"]
+        for r in spark.table(cat.NAME_MAP_TABLE)
+        .filter(F.col("logical_name") == "Guard Dogs")
+        .collect()
+    }
+    assert mapped == {"guard_dogs", "guard_dogs_2"}
+
+    row = dict(
+        id="guard-roundtrip",
+        filename="it's a \"q\" \\ file.csv",
+        database_name="default",
+        table_name="t",
+        bytes_todo=10**12,
+        bytes_done=0,
+        rows_done=None,
+        started="2024-01-01 00:00:00",
+        completed=None,
+        error="bad value 'x' at C:\\tmp\\\"y\"",
+        seq=0,
+    )
+    ingest._append_progress(spark, None, row)
+    assert ingest.get_progress(spark, "guard-roundtrip") == row
 
 
 def test_multiline_sniff(tmp_path):
