@@ -50,6 +50,7 @@ from datasette_upload_csvs_spark.functions.vector import (
 from datasette_upload_csvs_spark.operators.similarity import _hyperplane
 from datasette_upload_csvs_spark.operators import dedup as _dedup
 from datasette_upload_csvs_spark.streaming.epoch_write import (
+    drain_epochs,
     read_state,
     write_epoch_partition,
 )
@@ -387,7 +388,7 @@ def ann_epoch(
     n_planes: int = 8,
     dim: int = 64,
     bucket_star_cap: int | str | None = None,
-) -> None:
+) -> dict | None:
     """One epoch of incremental ANN maintenance — factored out of the
     foreachBatch closure so the replay test can invoke a single epoch
     directly (semantics must not depend on the streaming engine never
@@ -409,9 +410,11 @@ def ann_epoch(
     family in maintained state costs each probe 1 candidate per
     table instead of K; cosine is still exactly verified on every
     emitted pair, families stay CC-connected through anchor edges.
-    """
+
+    Returns ``{}`` for a processed batch, None for an empty one (the
+    epoch-function contract epoch_write.drain_epochs counts by)."""
     if batch_df.isEmpty():
-        return
+        return None
     sp = batch_df.sparkSession
     vecs_table = f"{index_table}__vecs"
     bands = _multi_table_bands(batch_df, n_tables, n_planes, dim).persist()
@@ -525,6 +528,7 @@ def ann_epoch(
     )
     bands.unpersist()
     new_vecs.unpersist()
+    return {}
 
 
 def maintain_embedding_ann_stream(
@@ -558,53 +562,27 @@ def maintain_embedding_ann_stream(
     tests/test_ann_stream.py's replay test.
 
     `compact_every=N` folds closed epoch partitions (< the current
-    epoch) into each table's BASE partition every N epochs
-    (epoch_write.compact_state_table) — bounded partition counts
-    under unbounded streams. Safe inside the sink: the epoch being
-    processed is the ONLY epoch the engine can still replay (its
-    predecessors' offsets are committed), it is never folded, and a
-    crash mid-fold replays the epoch, whose deterministic watermark
-    resumes the fold at the right step. Each fold rewrites the base
-    (O(history)), so N tunes rewrite amplification vs partition
-    count — amortized O(history/N) per epoch."""
-    from datasette_upload_csvs_spark.streaming.epoch_write import (
-        compact_state_table,
+    epoch) of all three tables into their BASE partition every N
+    epochs — bounded partition counts under unbounded streams; each
+    fold rewrites the base (O(history)), so N tunes rewrite
+    amplification vs partition count. The schedule and why folding
+    inside the sink is replay-safe: epoch_write.drain_epochs."""
+    epoch_fn = functools.partial(
+        ann_epoch,
+        pairs_table=pairs_table,
+        index_table=index_table,
+        threshold=threshold,
+        n_tables=n_tables,
+        n_planes=n_planes,
+        dim=dim,
+        bucket_star_cap=bucket_star_cap,
     )
-
-    batches = {"n": 0}
-
-    def sink(batch_df: DataFrame, epoch: int) -> None:
-        # compaction BEFORE the empty-batch return: a fold scheduled
-        # on an empty epoch must still run or its window's partitions
-        # stay unfolded (see wide_fp_stream.maintain_wide_fp_stream)
-        if compact_every and epoch > 0 and epoch % compact_every == 0:
-            sp = batch_df.sparkSession
-            for t in (pairs_table, index_table, f"{index_table}__vecs"):
-                compact_state_table(sp, t, before_epoch=epoch)
-        if batch_df.isEmpty():
-            return
-        ann_epoch(
-            batch_df,
-            epoch,
-            pairs_table,
-            index_table,
-            threshold=threshold,
-            n_tables=n_tables,
-            n_planes=n_planes,
-            dim=dim,
-            bucket_star_cap=bucket_star_cap,
-        )
-        batches["n"] += 1
-
-    reader = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)  # one arrival file per epoch
-        .format("parquet")
-        .load(source_dir)
+    return drain_epochs(
+        spark,
+        source_dir,
+        schema,
+        epoch_fn,
+        (pairs_table, index_table, f"{index_table}__vecs"),
+        checkpoint_dir=checkpoint_dir,
+        compact_every=compact_every,
     )
-    writer = reader.writeStream.foreachBatch(sink).trigger(availableNow=True)
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    q = writer.start()
-    q.awaitTermination()
-    return batches["n"]

@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 
 from datasette_upload_csvs_spark.operators import curation, textstats
 from datasette_upload_csvs_spark.streaming.epoch_write import (
+    drain_epochs,
     write_epoch_partition,
 )
 
@@ -75,38 +76,26 @@ def annotate_stream(
 ) -> int:
     """Drain a parquet stream of (doc_id, text) into the annotations
     table via foreachBatch + Trigger.AvailableNow. Returns the number
-    of micro-batches processed. Re-running with the same checkpoint
-    resumes from stored offsets — already-annotated files are never
-    re-read, and a replayed epoch overwrites its own partition
-    (_write_batch), so table contents stay exactly-once."""
-    n_batches = 0
+    of micro-batches processed (every delivered batch, empty ones
+    included). Re-running with the same checkpoint resumes from
+    stored offsets — already-annotated files are never re-read, and a
+    replayed epoch overwrites its own partition (_write_batch), so
+    table contents stay exactly-once. ``compact_every`` folds the
+    table on the shared drain's schedule (epoch_write.drain_epochs)."""
 
-    def sink(batch: DataFrame, batch_id: int) -> None:
-        nonlocal n_batches
-        n_batches += 1
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            # fold closed epochs into BASE — bounded partitions under
-            # unbounded streams; replay-safe inside the sink (see
-            # maintain_embedding_ann_stream)
-            from datasette_upload_csvs_spark.streaming.epoch_write import (
-                compact_state_table,
-            )
-
-            compact_state_table(
-                spark, annotations_table, before_epoch=batch_id
-            )
+    def epoch_fn(batch: DataFrame, batch_id: int) -> dict:
         _write_batch(
             annotate(batch).withColumn("_batch_id", F.lit(batch_id)),
             annotations_table,
         )
+        return {}
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(source_dir)
+    return drain_epochs(
+        spark,
+        source_dir,
+        schema,
+        epoch_fn,
+        (annotations_table,),
+        checkpoint_dir=checkpoint_dir,
+        compact_every=compact_every,
     )
-    writer = stream.writeStream.foreachBatch(sink).trigger(availableNow=True)
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    writer.start().awaitTermination()
-    return n_batches

@@ -17,7 +17,9 @@ exactly-once recipe every stateful sink in this package uses:
 at-least-once delivery x (masked reads + idempotent partitioned
 writes) = exactly-once table contents. Proven by the replay tests in
 tests/test_curation_stream.py, tests/test_split_stream.py, and
-tests/test_ann_stream.py.
+tests/test_ann_stream.py. :func:`drain_epochs` is the one foreachBatch
+drain loop the maintained-state streams share (schedule check,
+in-sink compaction, epoch counting).
 
 Compaction (round-8): one partition per epoch forever is the classic
 small-file / partition-explosion failure at 100 TB-stream epoch
@@ -38,6 +40,8 @@ partition left by a crashed compaction is invisible to the stream.
 """
 
 from __future__ import annotations
+
+import time
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -332,3 +336,117 @@ def _drop_partitions(spark, table: str, ids, part_col: str = "_batch_id") -> Non
         return
     specs = ", ".join(f"PARTITION ({part_col}={int(i)})" for i in ids)
     spark.sql(f"ALTER TABLE {table} DROP IF EXISTS {specs}")
+
+
+def stage_meter(on_stage, epoch: int):
+    """The ``on_stage(epoch, stage, seconds)`` meter protocol as one
+    clock: ``mark(name)`` reports the seconds since the previous mark
+    (or since creation) as stage ``name``; ``mark()`` restarts the
+    clock without reporting (for spans a callee meters itself). A
+    None ``on_stage`` makes every mark a no-op report."""
+    t_mark = time.perf_counter()
+
+    def mark(name: str | None = None) -> None:
+        nonlocal t_mark
+        now = time.perf_counter()
+        if on_stage is not None and name is not None:
+            on_stage(epoch, name, now - t_mark)
+        t_mark = now
+
+    return mark
+
+
+def drain_epochs(
+    spark,
+    source_dir: str,
+    schema: str,
+    epoch_fn,
+    tables,
+    checkpoint_dir: str | None = None,
+    compact_every: int | None = None,
+    major_every: int | None = None,
+    on_stage=None,
+) -> int:
+    """Drain a parquet arrival directory (one file per micro-batch,
+    Trigger.AvailableNow) through ``epoch_fn(batch_df, epoch)`` and
+    return the number of epochs it processed — those for which it
+    returned non-None (epoch functions return None for an empty
+    batch, so the drain never probes emptiness itself).
+    ``checkpoint_dir`` makes the drain resumable: a restart with the
+    same checkpoint skips committed arrival files.
+
+    Compaction of ``tables`` (the stream's ``_batch_id``-partitioned
+    state) runs inside the sink, BEFORE ``epoch_fn``, on every epoch
+    with ``epoch % compact_every == 0``:
+
+    * ``compact_every=N`` alone: a MAJOR fold of all closed epochs
+      into BASE every N epochs (:func:`compact_state_table`) —
+      bounded partitions, but each fold rewrites the history, an
+      amortized O(history/N) per epoch.
+    * ``compact_every=N, major_every=M`` (M a multiple of N; checked
+      here, once, before the stream starts): the generational
+      :func:`tiered_compact` schedule — every N epochs the newest
+      closed window folds into a run partition (I/O = one window),
+      every M epochs runs + base fold into BASE; amortized
+      O(window + history/M) per epoch.
+
+    Each fold is metered as ``on_stage(epoch, "compact:<table>", s)``.
+
+    Why folding inside the sink is replay-safe: under Structured
+    Streaming's single-inflight-epoch contract the epoch being
+    delivered is the ONLY one the engine can still replay (its
+    predecessors' offsets are committed). The fold's watermark is
+    that epoch, so its partition is never folded and the replay mask
+    (``_batch_id != epoch``, see :func:`read_state`) hides exactly
+    what it hid before. A crash mid-fold replays the epoch, whose
+    deterministic watermark resumes the fold at the right step (the
+    staging id encodes it — see :func:`compact_state_table`).
+
+    Why the fold runs before ``epoch_fn``'s empty-batch return: folds
+    depend on the epoch id alone and are safe on empty batches; a
+    fold scheduled on an epoch whose arrival file happened to be
+    empty must still run, or its window's partitions stay unfolded
+    until the next scheduled fold (a minor window under
+    ``tiered_compact`` until the next major, or forever without
+    one), voiding the bounded-partition guarantee."""
+    if major_every is not None:
+        if not compact_every:
+            raise ValueError("major_every requires compact_every")
+        if major_every % compact_every != 0:
+            raise ValueError(
+                f"major_every({major_every}) must be a multiple of "
+                f"compact_every({compact_every})"
+            )
+    processed = 0
+
+    def sink(batch_df: DataFrame, epoch: int) -> None:
+        nonlocal processed
+        if compact_every and epoch > 0 and epoch % compact_every == 0:
+            sp = batch_df.sparkSession
+            mark = stage_meter(on_stage, epoch)
+            for t in tables:
+                if major_every is not None:
+                    tiered_compact(
+                        sp,
+                        t,
+                        epoch,
+                        minor_every=compact_every,
+                        major_every=major_every,
+                    )
+                else:
+                    compact_state_table(sp, t, before_epoch=epoch)
+                mark(f"compact:{t}")
+        if epoch_fn(batch_df, epoch) is not None:
+            processed += 1
+
+    writer = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(source_dir)
+        .writeStream.foreachBatch(sink)
+        .trigger(availableNow=True)
+    )
+    if checkpoint_dir:
+        writer = writer.option("checkpointLocation", checkpoint_dir)
+    writer.start().awaitTermination()
+    return processed

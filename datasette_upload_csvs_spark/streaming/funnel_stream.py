@@ -77,7 +77,9 @@ from datasette_upload_csvs_spark.pipeline import (
     gopher_keep_expr,
 )
 from datasette_upload_csvs_spark.streaming.epoch_write import (
+    drain_epochs,
     read_state,
+    stage_meter,
     write_epoch_partition,
 )
 from datasette_upload_csvs_spark.streaming.near_dup_stream import (
@@ -126,19 +128,9 @@ def funnel_epoch(
 
     Returns the near-dup maintainer's stats dict (``cand_pairs`` —
     see near_dup_epoch) or None for an empty batch."""
-    import time
-
     if batch_df.isEmpty():
         return None
-    t_mark = time.perf_counter()
-
-    def _stage(name: str) -> None:
-        nonlocal t_mark
-        if on_stage is not None:
-            now = time.perf_counter()
-            on_stage(epoch, name, now - t_mark)
-            t_mark = now
-
+    _stage = stage_meter(on_stage, epoch)
     spark = batch_df.sparkSession
     docs_table = f"{prefix}_docs"
     from datasette_upload_csvs_spark.functions.text import token_count
@@ -235,7 +227,7 @@ def funnel_epoch(
         on_stage=on_stage,
         batch_rows_max=n_b,
     )
-    t_mark = time.perf_counter()  # nd_* stages metered internally
+    _stage()  # nd_* stages metered internally
     indexed = to_index.select("doc_id").withColumn(
         "indexed", F.lit(True)
     )
@@ -274,20 +266,10 @@ def run_curation_funnel_stream(
     incremental stages (see module docstring). Trigger.AvailableNow;
     returns micro-batches processed.
 
-    Compaction of the four state tables:
-
-    * ``compact_every=N`` alone (the r12 behavior): a MAJOR fold into
-      BASE every N epochs — bounded partitions, but each fold
-      rewrites the whole history, an amortized O(history/N) per-epoch
-      drain that grows linearly with maintained state
-      (BENCH_FUNNEL_STREAM's r12 scale leg measured exactly this).
-    * ``compact_every=N, major_every=M`` (round-13, M a multiple of
-      N): the generational ``tiered_compact`` schedule — every N
-      epochs the newest closed window folds into a RUN partition
-      (I/O = one window), every M epochs runs+base fold into BASE.
-      Amortized rewrite I/O per epoch drops to
-      O(window + history/M); pass major_every=None-like large M for
-      flat per-epoch cost at long-stream scale.
+    ``checkpoint_dir``, ``compact_every`` and ``major_every`` are the
+    shared drain's (epoch_write.drain_epochs — the major-only vs
+    tiered fold schedules and why in-sink folding is replay-safe);
+    the four funnel_tables(prefix) are folded on schedule.
 
     `on_epoch(epoch)` (optional) is invoked after each non-empty
     epoch — the per-epoch cost meter hook for the widening bench.
@@ -295,22 +277,6 @@ def run_curation_funnel_stream(
     attribution hook (see funnel_epoch; metered runs force extra
     materializations — keep headline timings unmetered). Compaction
     is metered as ``compact:<table>`` stages."""
-    import time
-
-    from datasette_upload_csvs_spark.streaming.epoch_write import (
-        compact_state_table,
-        tiered_compact,
-    )
-
-    if major_every is not None:
-        if not compact_every:
-            raise ValueError("major_every requires compact_every")
-        if major_every % compact_every != 0:
-            raise ValueError(
-                f"major_every({major_every}) must be a multiple of "
-                f"compact_every({compact_every})"
-            )
-
     bench_grams = None
     if benchmark is not None:
         # benchmark is static and benchmark-sized: materialize its
@@ -323,32 +289,8 @@ def run_curation_funnel_stream(
             .localCheckpoint(eager=True)
         )
 
-    batches = {"n": 0}
-
-    def sink(batch_df: DataFrame, epoch: int) -> None:
-        # compaction BEFORE the empty-batch return (see
-        # maintain_near_dup_stream for why)
-        if compact_every and epoch > 0 and epoch % compact_every == 0:
-            sp = batch_df.sparkSession
-            for t in funnel_tables(prefix):
-                t0 = time.perf_counter()
-                if major_every is not None:
-                    tiered_compact(
-                        sp,
-                        t,
-                        epoch,
-                        minor_every=compact_every,
-                        major_every=major_every,
-                    )
-                else:
-                    compact_state_table(sp, t, before_epoch=epoch)
-                if on_stage is not None:
-                    on_stage(
-                        epoch, f"compact:{t}", time.perf_counter() - t0
-                    )
-        if batch_df.isEmpty():
-            return
-        funnel_epoch(
+    def epoch_fn(batch_df: DataFrame, epoch: int) -> dict | None:
+        stats = funnel_epoch(
             batch_df,
             epoch,
             prefix,
@@ -360,22 +302,21 @@ def run_curation_funnel_stream(
             bucket_star_cap=bucket_star_cap,
             on_stage=on_stage,
         )
-        batches["n"] += 1
-        if on_epoch is not None:
+        if stats is not None and on_epoch is not None:
             on_epoch(epoch)
+        return stats
 
-    writer = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(source_dir)
-        .writeStream.foreachBatch(sink)
-        .trigger(availableNow=True)
+    return drain_epochs(
+        spark,
+        source_dir,
+        schema,
+        epoch_fn,
+        funnel_tables(prefix),
+        checkpoint_dir=checkpoint_dir,
+        compact_every=compact_every,
+        major_every=major_every,
+        on_stage=on_stage,
     )
-    if checkpoint_dir is not None:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    q = writer.start()
-    q.awaitTermination()
-    return batches["n"]
 
 
 @dataclass

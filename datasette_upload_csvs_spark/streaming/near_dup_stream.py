@@ -24,6 +24,8 @@ appended within one batch (mutable-state join, like streaming/cdc.py).
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -34,7 +36,9 @@ from datasette_upload_csvs_spark.operators.dedup import (
     _MERSENNE,
 )
 from datasette_upload_csvs_spark.streaming.epoch_write import (
+    drain_epochs,
     read_state,
+    stage_meter,
     write_epoch_partition,
 )
 
@@ -184,8 +188,6 @@ def near_dup_epoch(
     candidate checkpoint is NOT attribution-only: it always runs, see
     the inline note.) Stages: nd_sig, nd_cand, nd_verify_pairs,
     nd_index_write, nd_sets_write."""
-    import time
-
     from pyspark.sql import Observation
 
     if batch_rows_max is not None:
@@ -193,15 +195,7 @@ def near_dup_epoch(
             return None
     elif batch_df.isEmpty():
         return None
-    t_mark = time.perf_counter()
-
-    def _stage(name: str) -> None:
-        nonlocal t_mark
-        if on_stage is not None:
-            now = time.perf_counter()
-            on_stage(epoch, name, now - t_mark)
-            t_mark = now
-
+    _stage = stage_meter(on_stage, epoch)
     spark = batch_df.sparkSession
     rows = num_perm // n_bands
     sets_table = f"{index_table}__sets"
@@ -356,71 +350,28 @@ def maintain_near_dup_stream(
     BOTH the common between-batch kill AND a mid-batch kill+replay
     recover to exactly the contents of an uninterrupted run.
 
-    `compact_every=N` folds closed epochs into each table's BASE
-    partition every N epochs — bounded partitions under unbounded
-    streams; see maintain_embedding_ann_stream for the replay-safety
-    argument and the rewrite-amplification tradeoff. Add
-    ``major_every=M`` (a multiple of N) for the generational
-    ``tiered_compact`` schedule instead: minor window folds every N
-    epochs, full history folds only every M — amortized rewrite I/O
-    O(window + history/M) per epoch instead of O(history/N) (see
-    run_curation_funnel_stream's compaction note)."""
-    from datasette_upload_csvs_spark.streaming.epoch_write import (
-        compact_state_table,
-        tiered_compact,
+    ``compact_every`` / ``major_every`` fold all three tables on the
+    shared drain's schedule (epoch_write.drain_epochs: major-only
+    folds every N epochs, or the generational tiered_compact schedule
+    with majors every M — and why folding inside the sink is
+    replay-safe)."""
+
+    epoch_fn = functools.partial(
+        near_dup_epoch,
+        pairs_table=pairs_table,
+        index_table=index_table,
+        threshold=threshold,
+        num_perm=num_perm,
+        n_bands=n_bands,
+        bucket_star_cap=bucket_star_cap,
     )
-
-    if major_every is not None:
-        if not compact_every:
-            raise ValueError("major_every requires compact_every")
-        if major_every % compact_every != 0:
-            raise ValueError(
-                f"major_every({major_every}) must be a multiple of "
-                f"compact_every({compact_every})"
-            )
-
-    batches = {"n": 0}
-
-    def sink(batch_df: DataFrame, epoch: int) -> None:
-        # compaction BEFORE the empty-batch return: a fold scheduled
-        # on an empty epoch must still run or its window's partitions
-        # stay unfolded (see wide_fp_stream.maintain_wide_fp_stream)
-        if compact_every and epoch > 0 and epoch % compact_every == 0:
-            sp = batch_df.sparkSession
-            for t in (pairs_table, index_table, f"{index_table}__sets"):
-                if major_every is not None:
-                    tiered_compact(
-                        sp,
-                        t,
-                        epoch,
-                        minor_every=compact_every,
-                        major_every=major_every,
-                    )
-                else:
-                    compact_state_table(sp, t, before_epoch=epoch)
-        if batch_df.isEmpty():
-            return
-        near_dup_epoch(
-            batch_df,
-            epoch,
-            pairs_table,
-            index_table,
-            threshold=threshold,
-            num_perm=num_perm,
-            bucket_star_cap=bucket_star_cap,
-            n_bands=n_bands,
-        )
-        batches["n"] += 1
-
-    writer = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(source_dir)
-        .writeStream.foreachBatch(sink)
-        .trigger(availableNow=True)
+    return drain_epochs(
+        spark,
+        source_dir,
+        schema,
+        epoch_fn,
+        (pairs_table, index_table, f"{index_table}__sets"),
+        checkpoint_dir=checkpoint_dir,
+        compact_every=compact_every,
+        major_every=major_every,
     )
-    if checkpoint_dir is not None:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    q = writer.start()
-    q.awaitTermination()
-    return batches["n"]

@@ -30,6 +30,8 @@ over the full corpus snapshot.
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -38,7 +40,7 @@ from datasette_upload_csvs_spark.operators.multimodal import (
     perceptual_hashes,
 )
 from datasette_upload_csvs_spark.streaming.epoch_write import (
-    compact_state_table,
+    drain_epochs,
     read_state,
     write_epoch_partition,
 )
@@ -75,7 +77,7 @@ def phash_epoch(
     payload_col: str = "payload",
     id_col: str = "media_id",
     bucket_star_cap: int | str | None = None,
-) -> None:
+) -> dict | None:
     """One epoch of incremental perceptual-hash maintenance —
     factored out of the foreachBatch closure so the replay test can
     invoke a single epoch directly. Exactly-once across both mutable
@@ -89,9 +91,12 @@ def phash_epoch(
     (dedup.cap_bucket_side) — a K-member perceptual-hash family in
     maintained state costs each probe 1 candidate per chunk instead
     of K; hamming still exactly verified on every emitted pair,
-    families stay CC-connected through anchor edges."""
+    families stay CC-connected through anchor edges.
+
+    Returns ``{}`` for a processed batch, None for an empty one (the
+    epoch-function contract epoch_write.drain_epochs counts by)."""
     if batch_df.isEmpty():
-        return
+        return None
     sp = batch_df.sparkSession
     fp_new = perceptual_hashes(
         batch_df, payload_col=payload_col, id_col=id_col
@@ -208,6 +213,7 @@ def phash_epoch(
     )
     new_chunks.unpersist()
     fp_new.unpersist()
+    return {}
 
 
 def maintain_phash_stream(
@@ -223,36 +229,23 @@ def maintain_phash_stream(
 ) -> int:
     """Drain a parquet stream of (media_id, payload) into perceptual
     near-dup PAIRS while maintaining the fingerprint table.
-    Trigger.AvailableNow; returns micro-batches processed. Same
-    exactly-once and `compact_every` contracts as
-    maintain_embedding_ann_stream."""
-    batches = {"n": 0}
-
-    def sink(batch_df: DataFrame, epoch: int) -> None:
-        # compaction BEFORE the empty-batch return: a fold scheduled
-        # on an empty epoch must still run or its window's partitions
-        # stay unfolded (see wide_fp_stream.maintain_wide_fp_stream)
-        if compact_every and epoch > 0 and epoch % compact_every == 0:
-            sp = batch_df.sparkSession
-            for t in (pairs_table, fp_table):
-                compact_state_table(sp, t, before_epoch=epoch)
-        if batch_df.isEmpty():
-            return
-        phash_epoch(
-            batch_df, epoch, pairs_table, fp_table,
-            max_hamming=max_hamming, bucket_star_cap=bucket_star_cap,
-        )
-        batches["n"] += 1
-
-    reader = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .format("parquet")
-        .load(source_dir)
+    Trigger.AvailableNow; returns micro-batches processed.
+    Exactly-once via phash_epoch; ``checkpoint_dir`` and
+    ``compact_every`` (both tables folded) are the shared drain's —
+    see epoch_write.drain_epochs."""
+    epoch_fn = functools.partial(
+        phash_epoch,
+        pairs_table=pairs_table,
+        fp_table=fp_table,
+        max_hamming=max_hamming,
+        bucket_star_cap=bucket_star_cap,
     )
-    writer = reader.writeStream.foreachBatch(sink).trigger(availableNow=True)
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    q = writer.start()
-    q.awaitTermination()
-    return batches["n"]
+    return drain_epochs(
+        spark,
+        source_dir,
+        schema,
+        epoch_fn,
+        (pairs_table, fp_table),
+        checkpoint_dir=checkpoint_dir,
+        compact_every=compact_every,
+    )

@@ -120,7 +120,7 @@ def assign_splits_stream(
 
     `compact_every=N` folds the splits table's closed epochs into its
     BASE partition every N epochs (epoch_write.compact_state_table) —
-    same replay-safety argument as maintain_embedding_ann_stream —
+    same replay-safety argument as epoch_write.drain_epochs —
     AND folds the shingle index's committed batch partitions
     (ShingleIndex.compact, round 9): the watermark is the in-flight
     epoch, which under the single-inflight-epoch contract is the only

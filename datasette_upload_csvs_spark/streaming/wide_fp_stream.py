@@ -28,12 +28,14 @@ over the full corpus snapshot.
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from datasette_upload_csvs_spark.operators import dedup
 from datasette_upload_csvs_spark.streaming.epoch_write import (
-    compact_state_table,
+    drain_epochs,
     read_state,
     write_epoch_partition,
 )
@@ -96,7 +98,7 @@ def wide_fp_epoch(
     id_col: str = "doc_id",
     portable: bool = True,
     bucket_star_cap: int | str | None = None,
-) -> None:
+) -> dict | None:
     """One epoch of incremental 128-bit near-dup maintenance —
     factored out of the foreachBatch closure so the replay test can
     invoke a single epoch directly. Exactly-once across both mutable
@@ -117,7 +119,10 @@ def wide_fp_epoch(
     per chunk. Hamming is still exactly verified on every emitted
     pair; families stay CC-connected through anchor edges (every
     member was a probe once), the batch operators' recall
-    contract."""
+    contract.
+
+    Returns ``{}`` for a processed batch, None for an empty one (the
+    epoch-function contract epoch_write.drain_epochs counts by)."""
     n_words = len(FP_COLS)
     if n_chunks % n_words != 0:
         raise ValueError(
@@ -135,7 +140,7 @@ def wide_fp_epoch(
             "recall-LOSSY; raise n_chunks"
         )
     if batch_df.isEmpty():
-        return
+        return None
     sp = batch_df.sparkSession
     fp_new = (
         dedup.simhash128(batch_df, text_col, id_col, portable=portable)
@@ -258,6 +263,7 @@ def wide_fp_epoch(
     )
     new_chunks.unpersist()
     fp_new.unpersist()
+    return {}
 
 
 def maintain_wide_fp_stream(
@@ -270,66 +276,33 @@ def maintain_wide_fp_stream(
     n_chunks: int = 4,
     checkpoint_dir: str | None = None,
     compact_every: int | None = None,
-    compact_schedule: tuple | None = None,
+    major_every: int | None = None,
     portable: bool = True,
     bucket_star_cap: int | str | None = None,
 ) -> int:
     """Drain a parquet stream of (doc_id, text) into 128-bit near-dup
     PAIRS while maintaining the fingerprint table.
-    Trigger.AvailableNow; returns micro-batches processed. Same
-    exactly-once and `compact_every` contracts as
-    maintain_phash_stream. `compact_schedule=(minor_every,
-    major_every)` uses the generational fold instead
-    (epoch_write.tiered_compact): minor folds cost one window of
-    I/O, majors absorb runs and base — the long-stream regime where
-    compact_every's per-fold O(history) rewrite dominates."""
-    from datasette_upload_csvs_spark.streaming.epoch_write import (
-        tiered_compact,
+    Trigger.AvailableNow; returns micro-batches processed.
+    Exactly-once via wide_fp_epoch; ``checkpoint_dir``,
+    ``compact_every`` and ``major_every`` (both tables folded) are the
+    shared drain's — see epoch_write.drain_epochs (``major_every``
+    selects the generational tiered_compact schedule)."""
+    epoch_fn = functools.partial(
+        wide_fp_epoch,
+        pairs_table=pairs_table,
+        fp_table=fp_table,
+        max_hamming=max_hamming,
+        n_chunks=n_chunks,
+        portable=portable,
+        bucket_star_cap=bucket_star_cap,
     )
-
-    if compact_every and compact_schedule:
-        raise ValueError("pass compact_every OR compact_schedule, not both")
-    batches = {"n": 0}
-
-    def sink(batch_df: DataFrame, epoch: int) -> None:
-        # compaction runs BEFORE the empty-batch early-return: folds
-        # are deterministic in epoch and safe on empty batches, and
-        # skipping a scheduled minor fold because its epoch happened
-        # to be empty would strand that window's partitions until the
-        # next major (or forever with major_every=None), voiding the
-        # bounded-partition guarantee tiered_compact provides.
-        sp = batch_df.sparkSession
-        if compact_schedule:
-            for t in (pairs_table, fp_table):
-                tiered_compact(
-                    sp, t, epoch, compact_schedule[0], compact_schedule[1]
-                )
-        elif compact_every and epoch > 0 and epoch % compact_every == 0:
-            for t in (pairs_table, fp_table):
-                compact_state_table(sp, t, before_epoch=epoch)
-        if batch_df.isEmpty():
-            return
-        wide_fp_epoch(
-            batch_df,
-            epoch,
-            pairs_table,
-            fp_table,
-            max_hamming=max_hamming,
-            n_chunks=n_chunks,
-            portable=portable,
-            bucket_star_cap=bucket_star_cap,
-        )
-        batches["n"] += 1
-
-    reader = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .format("parquet")
-        .load(source_dir)
+    return drain_epochs(
+        spark,
+        source_dir,
+        schema,
+        epoch_fn,
+        (pairs_table, fp_table),
+        checkpoint_dir=checkpoint_dir,
+        compact_every=compact_every,
+        major_every=major_every,
     )
-    writer = reader.writeStream.foreachBatch(sink).trigger(availableNow=True)
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    q = writer.start()
-    q.awaitTermination()
-    return batches["n"]

@@ -9,8 +9,10 @@ from __future__ import annotations
 
 import os
 import shutil
+from unittest import mock
 
 from pyspark.sql import functions as F
+from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
 
 from datasette_upload_csvs_spark.pipeline import run_curation_funnel
 from datasette_upload_csvs_spark.sources.parquet import read_table
@@ -60,17 +62,26 @@ def _assert_stream_equals_batch(spark, corpus, benchmark, tmp_path,
     _land(corpus, "doc_id", 3, src, tmp_path, tag)
     _drop_state(spark)
     try:
-        n = run_curation_funnel_stream(
-            spark,
-            src,
-            DOC_SCHEMA,
-            benchmark=benchmark,
-            prefix=PREFIX,
-            bucket_star_cap=cap,
-            compact_every=2,  # fires at epoch 2 — MID-drain
-            checkpoint_dir=str(tmp_path / f"ck_{tag}"),
-        )
+        # count emptiness probes: the foreachBatch frame is a classic
+        # DataFrame, so the patch must target that class
+        with mock.patch.object(
+            ClassicDataFrame,
+            "isEmpty",
+            autospec=True,
+            side_effect=ClassicDataFrame.isEmpty,
+        ) as probe:
+            n = run_curation_funnel_stream(
+                spark,
+                src,
+                DOC_SCHEMA,
+                benchmark=benchmark,
+                prefix=PREFIX,
+                bucket_star_cap=cap,
+                compact_every=2,  # fires at epoch 2 — MID-drain
+                checkpoint_dir=str(tmp_path / f"ck_{tag}"),
+            )
         assert n == 3
+        assert probe.call_count == 3  # one emptiness probe per epoch
         spark.catalog.clearCache()
         res = funnel_stream_stages(spark, PREFIX)
         want_counts, batch_stages, b_split, b_shards = _batch_funnel(

@@ -135,3 +135,66 @@ def test_phash_stream_compaction_bounded(spark, sf_dir, tmp_path):
         assert parts[0] == BASE_EPOCH and len(parts) <= 3, (t, parts)
     for t in ("phc_pairs", "phc_fp"):
         spark.sql(f"DROP TABLE IF EXISTS {t}")
+
+
+def test_phash_stream_empty_arrival_folds_and_probes_once(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """An empty arrival file is delivered as its own micro-batch: it
+    is not counted as processed, the fold scheduled on its epoch still
+    runs, and every delivered batch is probed for emptiness exactly
+    once (by phash_epoch — the drain itself never probes)."""
+    from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
+
+    corpus = _media_corpus(spark, sf_dir)
+    src = str(tmp_path / "media_stream_empty")
+    os.makedirs(src)
+    parts = [
+        corpus.filter(F.pmod("media_id", F.lit(3)) == i) for i in range(3)
+    ] + [corpus.limit(0)]  # the last epoch's arrival holds no rows
+    for i, part in enumerate(parts):
+        d = str(tmp_path / f"e{i}")
+        part.coalesce(1).write.mode("overwrite").parquet(d)
+        name = [f for f in os.listdir(d) if f.endswith(".parquet")][0]
+        dst = os.path.join(src, f"arrival_{i}.parquet")
+        shutil.copy(os.path.join(d, name), dst)
+        os.utime(dst, (1_000_000 + i, 1_000_000 + i))  # arrival order
+    tables = ("phe_pairs", "phe_fp")
+    for t in tables:
+        spark.sql(f"DROP TABLE IF EXISTS {t}")
+
+    probes = []
+    is_empty = ClassicDataFrame.isEmpty
+
+    def counting_is_empty(self):
+        probes.append(1)
+        return is_empty(self)
+
+    monkeypatch.setattr(ClassicDataFrame, "isEmpty", counting_is_empty)
+    n = maintain_phash_stream(
+        spark,
+        src,
+        "media_id bigint, payload binary",
+        pairs_table=tables[0],
+        fp_table=tables[1],
+        max_hamming=2,
+        compact_every=1,
+    )
+    monkeypatch.undo()
+
+    assert n == 3  # the empty epoch is delivered but not processed
+    assert len(probes) == len(parts)  # one probe per delivered batch
+    for t in tables:
+        got_parts = {
+            r["_batch_id"]
+            for r in spark.table(t).select("_batch_id").distinct().collect()
+        }
+        # epoch 3 (empty) still folded epochs 0..2 into BASE
+        assert got_parts == {BASE_EPOCH}, (t, got_parts)
+    got = {
+        (r["id_a"], r["id_b"], r["hamming"])
+        for r in spark.table(tables[0]).collect()
+    }
+    assert got == _batch_pairs(corpus)
+    for t in tables:
+        spark.sql(f"DROP TABLE IF EXISTS {t}")

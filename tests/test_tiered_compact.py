@@ -20,6 +20,15 @@ from datasette_upload_csvs_spark.streaming.epoch_write import (
     tiered_compact,
     write_epoch_partition,
 )
+from datasette_upload_csvs_spark.streaming.funnel_stream import (
+    run_curation_funnel_stream,
+)
+from datasette_upload_csvs_spark.streaming.near_dup_stream import (
+    maintain_near_dup_stream,
+)
+from datasette_upload_csvs_spark.streaming.wide_fp_stream import (
+    maintain_wide_fp_stream,
+)
 
 
 def _epoch_rows(spark, epoch, n=5):
@@ -149,3 +158,34 @@ def test_validation(spark):
         tiered_compact(spark, "x", 8, minor_every=4, major_every=10)
     assert tiered_compact(spark, "x", 0, minor_every=4) == 0
     assert tiered_compact(spark, "x", 5, minor_every=4) == 0  # off-schedule
+
+
+@pytest.mark.parametrize(
+    "drain, tables",
+    [
+        (run_curation_funnel_stream, ()),
+        (maintain_near_dup_stream, ("x_pairs", "x_index")),
+        (maintain_wide_fp_stream, ("x_pairs", "x_fp")),
+    ],
+    ids=["funnel", "near_dup", "wide_fp"],
+)
+@pytest.mark.parametrize(
+    "schedule",
+    [
+        {"major_every": 4},  # major without minor
+        {"compact_every": 2, "major_every": 3},  # not a multiple
+    ],
+    ids=["no_minor", "not_multiple"],
+)
+def test_stream_drains_reject_bad_schedules_before_starting(
+    spark, drain, tables, schedule
+):
+    """The shared drain checks the fold schedule once, up front: a bad
+    one raises before any query starts (the source does not exist, so
+    a started stream would fail differently)."""
+    with pytest.raises(ValueError, match="major_every"):
+        drain(
+            spark, "/nonexistent", "doc_id bigint, text string", *tables,
+            **schedule,
+        )
+    assert spark.streams.active == []

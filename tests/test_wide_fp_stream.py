@@ -143,13 +143,13 @@ def test_wide_fp_epoch_recall_contract(spark):
 
 
 def test_wide_fp_stream_tiered_schedule(spark, sf_dir, tmp_path):
-    """compact_schedule=(minor, major): the generational fold under a
-    live stream — same pair results, partitions bounded, and the two
-    compaction modes are mutually exclusive."""
+    """compact_every=minor, major_every=major: the generational fold
+    under a live stream — same pair results, partitions bounded, and
+    a major that is not a multiple of the minor is rejected."""
     corpus = _doc_corpus(spark, sf_dir)
     n = _drain(
         spark, corpus, tmp_path, ("wft_pairs", "wft_fp"),
-        compact_schedule=(1, 2),
+        compact_every=1, major_every=2,
     )
     assert n == 3
     got = {
@@ -166,7 +166,7 @@ def test_wide_fp_stream_tiered_schedule(spark, sf_dir, tmp_path):
     with pytest.raises(ValueError):
         maintain_wide_fp_stream(
             spark, "/nonexistent", "doc_id bigint, text string",
-            "x_p", "x_f", compact_every=2, compact_schedule=(1, 2),
+            "x_p", "x_f", compact_every=2, major_every=3,
         )
     for t in ("wft_pairs", "wft_fp"):
         spark.sql(f"DROP TABLE IF EXISTS {t}")
