@@ -275,32 +275,37 @@ def _op_config(op):
 # ------------------------------------------------------------------ arms
 
 def _apply_arm(arm):
-    """Monkeypatch near_dup_stream.semi_prune_fused for the chosen
-    arm. Every probe site imports the symbol from that module at
-    call time, so one setattr covers all five operators."""
-    from datasette_upload_csvs_spark.streaming import near_dup_stream
+    """Monkeypatch semi_prune_fused for the chosen arm. near_dup,
+    funnel and ann import the symbol from near_dup_stream at call
+    time; phash and wide_fp share fp_probe_epoch, which binds it at
+    wide_fp_stream's import — so both module attributes are set."""
+    from datasette_upload_csvs_spark.streaming import (
+        near_dup_stream,
+        wide_fp_stream,
+    )
     from pyspark.sql import functions as F
 
     if arm == "fused":
         return
     orig = near_dup_stream.semi_prune_fused
     if arm == "composite":
-        def composite(hist, keys_src, key_cols, broadcast_probe):
+        def patched(hist, keys_src, key_cols, broadcast_probe,
+                    materialize=False):
             pk = keys_src.select(*key_cols).distinct()
             if broadcast_probe:
                 pk = F.broadcast(pk)
-            return hist.join(pk, list(key_cols), "left_semi")
-
-        near_dup_stream.semi_prune_fused = composite
+            out = hist.join(pk, list(key_cols), "left_semi")
+            return out.localCheckpoint(eager=True) if materialize else out
     elif arm == "ckpt":
-        def ckpt(hist, keys_src, key_cols, broadcast_probe):
+        def patched(hist, keys_src, key_cols, broadcast_probe,
+                    materialize=False):
             return orig(
-                hist, keys_src, key_cols, broadcast_probe
-            ).localCheckpoint(eager=True)
-
-        near_dup_stream.semi_prune_fused = ckpt
+                hist, keys_src, key_cols, broadcast_probe, materialize=True
+            )
     else:
         sys.exit(f"unknown --arm {arm}")
+    for mod in (near_dup_stream, wide_fp_stream):
+        mod.semi_prune_fused = patched
 
 
 def main() -> None:

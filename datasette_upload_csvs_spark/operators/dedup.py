@@ -537,37 +537,6 @@ def _perm_consts(num_perm: int) -> list[tuple[int, int]]:
     return consts
 
 
-def minhash_signatures(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    num_perm: int = 128,
-) -> DataFrame:
-    """(id, signature array<long>[num_perm]) via explode + hash-agg.
-
-    Shape: explode the shingle-hash array to one row per (doc,
-    hash), then ONE hash aggregation with num_perm `min` states —
-    every operator (xxhash64, multiply-add-mod, min) runs inside
-    whole-stage codegen. Higher-order array functions are
-    interpreted in Spark, so the previous formulation (128
-    `array_min(transform(...))` expressions per row) paid ~128
-    interpreted traversals per document; the codegen'd aggregate
-    does the same |shingles|×num_perm integer ops at compiled
-    speed (measured ~3× faster end-to-end on the LSH pipeline).
-    The groupBy introduces a map-side partial agg, so the shuffle
-    carries one 128-long row per doc per mapper — and when the
-    input is already partitioned by id (minhash_near_dup_pairs
-    repartitions first), AQE keeps the exchange local-cheap.
-    """
-    hashes = F.transform(
-        shingles(F.col(text_col), n),
-        lambda s: F.pmod(F.xxhash64(s), F.lit(_MERSENNE)),
-    )
-    ex = docs.select(F.col(id_col), F.explode(hashes).alias("h"))
-    return _signatures_from_hashes(ex, id_col, num_perm)
-
-
 def _signatures_from_hashes(
     hashed: DataFrame, id_col: str = "doc_id", num_perm: int = 128
 ) -> DataFrame:
@@ -1847,16 +1816,7 @@ def simhash_near_dup_pairs(
     closure and vertex set; see minhash_near_dup_pairs). hamming on
     star rows is the rep-pair / intra-group value.
     """
-    if pair_mode not in ("clique", "star"):
-        raise ValueError(f"pair_mode must be 'clique' or 'star', got {pair_mode!r}")
-    if max_hamming >= 4 and not allow_lossy:
-        raise ValueError(
-            f"max_hamming={max_hamming} with the fixed 4-chunk bucketing "
-            "is recall-LOSSY (pigeonhole recall is exact only for "
-            "max_hamming <= 3); pass allow_lossy=True for a deliberate "
-            "lossy screen, or use fingerprint_hamming_pairs with a "
-            "larger n_chunks / simhash128 for exact wider radii"
-        )
+    _check_fp_chunking(1, 4, max_hamming, allow_lossy)
     fp = (simhash_portable if portable else simhash)(docs, text_col, id_col)
     return _fp_near_dup_pairs(
         fp, ["simhash64"], id_col, max_hamming, collapse_exact, pair_mode,
@@ -1890,7 +1850,8 @@ def fingerprint_hamming_pairs(
     more candidate pairs per bucket): 4×16 suits hamming ≤ 3
     (SimHash near-dup); 8×8 covers the hamming ≤ 7 thresholds
     perceptual-hash practice uses; 16×4-bit keys are usually too
-    dense to be selective. Must divide 64.
+    dense to be selective. Must be one of 1/2/4/8/16 (1 keys on the
+    whole word, so only max_hamming=0 is exact).
 
     Density ceiling: bucket keys of b = 64/c bits stop being
     selective once n approaches 2^b — e.g. 4×16-bit keys densify at
@@ -1911,18 +1872,8 @@ def fingerprint_hamming_pairs(
     bucket in another chunk, or exact-fp collapse; CC consumers keep
     identical components whenever members are within k of the
     anchor."""
-    if pair_mode not in ("clique", "star"):
-        raise ValueError(f"pair_mode must be 'clique' or 'star', got {pair_mode!r}")
-    if n_chunks not in (2, 4, 8, 16):
-        raise ValueError(f"n_chunks must be one of 2/4/8/16, got {n_chunks}")
-    if max_hamming >= n_chunks and not allow_lossy:
-        raise ValueError(
-            f"max_hamming={max_hamming} with n_chunks={n_chunks} is "
-            "recall-LOSSY (pigeonhole recall is exact only for "
-            "max_hamming <= n_chunks-1); pass allow_lossy=True for a "
-            "deliberate lossy screen or raise n_chunks"
-        )
-    out = _fp_near_dup_pairs(
+    _check_fp_chunking(1, n_chunks, max_hamming, allow_lossy)
+    return _fp_near_dup_pairs(
         fp.select(F.col(id_col), F.col(fp_col).alias("simhash64")),
         ["simhash64"],
         id_col,
@@ -1932,7 +1883,6 @@ def fingerprint_hamming_pairs(
         n_chunks,
         bucket_star_cap=bucket_star_cap,
     )
-    return out
 
 
 def fingerprint_hamming_pairs_wide(
@@ -1962,27 +1912,7 @@ def fingerprint_hamming_pairs_wide(
     must divide 64. Collapse gate, pair_mode, and output contract
     are exactly fingerprint_hamming_pairs'."""
     fp_cols = list(fp_cols)
-    n_words = len(fp_cols)
-    if n_words < 1:
-        raise ValueError("fp_cols must name at least one word column")
-    if pair_mode not in ("clique", "star"):
-        raise ValueError(f"pair_mode must be 'clique' or 'star', got {pair_mode!r}")
-    if n_chunks % n_words != 0:
-        raise ValueError(
-            f"n_chunks={n_chunks} must be a multiple of len(fp_cols)={n_words}"
-        )
-    cpw = n_chunks // n_words
-    if cpw not in (1, 2, 4, 8, 16):
-        raise ValueError(
-            f"chunks-per-word must be one of 1/2/4/8/16, got {cpw}"
-        )
-    if max_hamming >= n_chunks and not allow_lossy:
-        raise ValueError(
-            f"max_hamming={max_hamming} with n_chunks={n_chunks} is "
-            "recall-LOSSY (pigeonhole recall is exact only for "
-            "max_hamming <= n_chunks-1); pass allow_lossy=True for a "
-            "deliberate lossy screen or raise n_chunks"
-        )
+    _check_fp_chunking(len(fp_cols), n_chunks, max_hamming, allow_lossy)
     return _fp_near_dup_pairs(
         fp.select(F.col(id_col), *[F.col(c) for c in fp_cols]),
         fp_cols,
@@ -1992,6 +1922,94 @@ def fingerprint_hamming_pairs_wide(
         pair_mode,
         n_chunks,
         bucket_star_cap=bucket_star_cap,
+    )
+
+
+def _check_fp_chunking(
+    n_words: int,
+    n_chunks: int,
+    max_hamming: int,
+    allow_lossy: bool = False,
+) -> None:
+    """The pigeonhole rules of every fingerprint chunk join (batch and
+    stream): each of the ``n_words`` 64-bit words is cut into
+    n_chunks/n_words equal slices of a width dividing 64, and recall
+    is exact only for max_hamming ≤ n_chunks−1 (a pair within that
+    radius agrees on at least one whole chunk) — a wider radius
+    raises unless ``allow_lossy`` opts into the lossy screen."""
+    if n_words < 1:
+        raise ValueError("fp_cols must name at least one word column")
+    if n_chunks % n_words != 0:
+        raise ValueError(
+            f"n_chunks={n_chunks} must be a multiple of the fingerprint "
+            f"word count {n_words}"
+        )
+    if n_chunks // n_words not in (1, 2, 4, 8, 16):
+        raise ValueError(
+            f"chunks-per-word must be one of 1/2/4/8/16, got "
+            f"{n_chunks // n_words}"
+        )
+    if max_hamming >= n_chunks and not allow_lossy:
+        raise ValueError(
+            f"max_hamming={max_hamming} with n_chunks={n_chunks} is "
+            "recall-LOSSY (pigeonhole recall is exact only for "
+            "max_hamming <= n_chunks-1); raise n_chunks, or pass "
+            "allow_lossy=True where the operator offers a deliberate "
+            "lossy screen"
+        )
+
+
+def _fp_chunk_keys(
+    fp: DataFrame, fp_cols, id_col: str, n_chunks: int
+) -> DataFrame:
+    """(id, *fp_cols, chunk, val): one pigeonhole key per chunk,
+    map-only. Chunk i of word w covers bits [bits·j, bits·(j+1)) of
+    that word (j = i mod cpw); the pigeonhole argument needs only
+    that the chunks PARTITION the concatenated fingerprint, so
+    per-word slicing is as exact as slicing a single 64·w-bit integer
+    would be. cpw == 1 keys on the whole word (no shift/mask:
+    (1<<64)-1 overflows a signed long)."""
+    cpw = n_chunks // len(fp_cols)
+    bits = 64 // cpw
+    mask = (1 << bits) - 1
+
+    def _chunk_val(word: str, j: int):
+        if cpw == 1:
+            return F.col(word)
+        return F.shiftrightunsigned(F.col(word), bits * j).bitwiseAND(
+            F.lit(mask)
+        )
+
+    return fp.select(
+        F.col(id_col),
+        *[F.col(c) for c in fp_cols],
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(w * cpw + j).alias("chunk"),
+                        _chunk_val(word, j).alias("val"),
+                    )
+                    for w, word in enumerate(fp_cols)
+                    for j in range(cpw)
+                ]
+            )
+        ).alias("cc"),
+    ).select(id_col, *fp_cols, "cc.chunk", "cc.val")
+
+
+def _hamming(fp_cols, left: str, right: str):
+    """Hamming distance between the fingerprints held in word columns
+    ``{left}{c}`` and ``{right}{c}`` for c in fp_cols: the sum of
+    per-word bit_count(xor)."""
+    return reduce(
+        lambda x, y: x + y,
+        [
+            F.bit_count(
+                F.col(f"{left}{c}").bitwiseXOR(F.col(f"{right}{c}"))
+            )
+            for c in fp_cols
+        ],
     )
 
 
@@ -2005,10 +2023,11 @@ def _fp_near_dup_pairs(
     n_chunks: int = 4,
     bucket_star_cap: int | str | None = None,
 ) -> DataFrame:
+    if pair_mode not in ("clique", "star"):
+        raise ValueError(f"pair_mode must be 'clique' or 'star', got {pair_mode!r}")
     cap_auto = (
         bucket_star_cap is not None and _validate_cap(bucket_star_cap)
     )
-    n_words = len(fp_cols)
     members = None
     if collapse_exact:
         fp = fp.persist()  # detection + members + chunks all read it
@@ -2035,48 +2054,8 @@ def _fp_near_dup_pairs(
             fp = groups.select(
                 F.col("_rep").alias(id_col), *fp_cols
             )
-    # chunk i of word w covers bits [bits·j, bits·(j+1)) of that word
-    # (j = i mod cpw); the pigeonhole argument needs only that the
-    # chunks PARTITION the concatenated fingerprint, so per-word
-    # slicing is as exact as slicing a single 64·w-bit integer would
-    # be. cpw == 1 keys on the whole word (no shift/mask: (1<<64)-1
-    # overflows a signed long).
-    cpw = n_chunks // n_words
-    bits = 64 // cpw
-    mask = (1 << bits) - 1
-
-    def _chunk_val(word: str, j: int):
-        if cpw == 1:
-            return F.col(word)
-        return F.shiftrightunsigned(F.col(word), bits * j).bitwiseAND(
-            F.lit(mask)
-        )
-
-    chunks = fp.select(
-        F.col(id_col),
-        *[F.col(c) for c in fp_cols],
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(w * cpw + j).alias("chunk"),
-                        _chunk_val(fp_cols[w], j).alias("val"),
-                    )
-                    for w in range(n_words)
-                    for j in range(cpw)
-                ]
-            )
-        ).alias("cc"),
-    ).select(id_col, *fp_cols, "cc.chunk", "cc.val")
-    ham = reduce(
-        lambda x, y: x + y,
-        [
-            F.bit_count(
-                F.col(f"a.{c}").bitwiseXOR(F.col(f"b.{c}"))
-            )
-            for c in fp_cols
-        ],
-    )
+    chunks = _fp_chunk_keys(fp, fp_cols, id_col, n_chunks)
+    ham = _hamming(fp_cols, "a.", "b.")
     if bucket_star_cap is None:
         a = chunks.alias("a")
         b = chunks.alias("b")
@@ -2131,15 +2110,6 @@ def _fp_near_dup_pairs(
                 ham.alias("hamming"),
             )
         )
-        star_ham = reduce(
-            lambda x, y: x + y,
-            [
-                F.bit_count(
-                    F.col(f"_a_{c}").bitwiseXOR(F.col(c))
-                )
-                for c in fp_cols
-            ],
-        )
         star_pairs = (
             tagged.filter(
                 (F.col("_bc") > cap_col)
@@ -2148,7 +2118,7 @@ def _fp_near_dup_pairs(
             .select(
                 F.col("_anchor").alias("id_a"),
                 F.col(id_col).alias("id_b"),
-                star_ham.alias("hamming"),
+                _hamming(fp_cols, "_a_", "").alias("hamming"),
             )
         )
         cand = small_pairs.unionByName(star_pairs)

@@ -463,22 +463,6 @@ def perceptual_hashes(
     return media.select(id_col, payload_col).mapInPandas(run, schema)
 
 
-def frame_sample_plan(media: DataFrame, every_n: int = 30) -> DataFrame:
-    """Video frame-sampling *plan* — metadata-only at this layer.
-
-    Emits one row per sampled frame index based on duration metadata;
-    actual frame decode is the stubbed decoder. Demonstrates the
-    explode-by-sequence shape (rows multiply JVM-side; payload joined
-    back by media_id only for the frames actually decoded).
-    """
-    return media.select(
-        "media_id",
-        F.explode(
-            F.sequence(F.lit(0), F.greatest(F.col("width"), F.lit(0)), F.lit(every_n))
-        ).alias("frame_idx"),
-    )
-
-
 def resize_media(
     media: DataFrame,
     target_w: int = 224,

@@ -43,20 +43,3 @@ def quantize_int8(
     )
     cols = keep_cols if keep_cols is not None else df.columns
     return df.select(*cols, scale.alias("scale"), q.alias("q"))
-
-
-def quantization_error(
-    df: DataFrame, vec_col: str = "embedding"
-) -> DataFrame:
-    """Per-row max absolute reconstruction error — the quality gate a
-    pipeline checks before swapping the index to int8."""
-    vec = as_double_array(F.col(vec_col))
-    scale = _scale(vec)
-    err = F.when(scale == 0.0, F.lit(0.0)).otherwise(
-        F.array_max(
-            F.transform(
-                vec, lambda x: F.abs(x - F.floor(x / scale + 0.5) * scale)
-            )
-        )
-    )
-    return df.withColumn("max_abs_err", err)

@@ -424,15 +424,19 @@ def lsh_bucket_ids(
 
 
 @functools.lru_cache(maxsize=16)
-def _lsh_bucket_expr(n_planes: int, dim: int):
+def _lsh_bucket_expr(n_planes: int, dim: int, first_plane: int = 0):
     """The n_planes-bit sign-pattern bucket over the double-array
-    column ``v``. Memoized per process — construction is n_planes×dim
-    F.lit py4j calls rebuilt identically per invocation otherwise
-    (the ann_stream._table_bucket_entries finding, r14 change 6);
-    Columns are immutable unresolved fragments, safe to reuse."""
+    column ``v``, bit p from hyperplane ``first_plane + p`` (a
+    multi-table index gives table t planes t*n_planes onward —
+    ann_stream._table_bucket_entries). Memoized per process —
+    construction is n_planes×dim F.lit py4j calls rebuilt identically
+    per invocation otherwise (r14 change 6); Columns are immutable
+    unresolved fragments, safe to reuse."""
     bucket = None
     for p in range(n_planes):
-        plane = F.array(*[F.lit(c) for c in _hyperplane(p, dim)])
+        plane = F.array(
+            *[F.lit(c) for c in _hyperplane(first_plane + p, dim)]
+        )
         bit = F.when(dot(F.col("v"), plane) >= 0, F.lit(1 << p)).otherwise(F.lit(0))
         bucket = bit if bucket is None else bucket + bit
     return bucket.cast("int")

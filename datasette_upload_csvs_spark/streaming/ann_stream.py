@@ -47,7 +47,10 @@ from datasette_upload_csvs_spark.functions.vector import (
     cosine,
     double_array_frame,
 )
-from datasette_upload_csvs_spark.operators.similarity import _hyperplane
+from datasette_upload_csvs_spark.operators.similarity import (
+    _hyperplane,
+    _lsh_bucket_expr,
+)
 from datasette_upload_csvs_spark.operators import dedup as _dedup
 from datasette_upload_csvs_spark.streaming.epoch_write import (
     drain_epochs,
@@ -70,29 +73,16 @@ def _table_bucket_entries(n_tables: int, n_planes: int, dim: int):
     construction is ~2 s of it). Columns are immutable unresolved
     expression fragments — reusing them across DataFrames/sessions in
     one process is exactly how prepared plans behave; the JVM gateway
-    outlives any SparkSession restart inside a process."""
-    entries = []
-    for t in range(n_tables):
-        bucket = None
-        for p in range(n_planes):
-            plane = F.array(
-                *[F.lit(c) for c in _hyperplane(t * n_planes + p, dim)]
-            )
-            proj = F.aggregate(
-                F.zip_with("v", plane, lambda a, b: a * b),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-            bit = F.when(proj >= 0, F.lit(1 << p)).otherwise(F.lit(0))
-            bucket = bit if bucket is None else bucket + bit
-        entries.append(
-            F.struct(
-                F.lit(t).alias("table_id"),
-                bucket.cast("int").alias("bucket"),
-            )
-        )
+    outlives any SparkSession restart inside a process. Each bucket
+    is similarity._lsh_bucket_expr over the table's plane range."""
     # tuple: the cached value must not be mutable by callers
-    return tuple(entries)
+    return tuple(
+        F.struct(
+            F.lit(t).alias("table_id"),
+            _lsh_bucket_expr(n_planes, dim, t * n_planes).alias("bucket"),
+        )
+        for t in range(n_tables)
+    )
 
 
 def _multi_table_bands(

@@ -128,8 +128,6 @@ def funnel_epoch(
 
     Returns the near-dup maintainer's stats dict (``cand_pairs`` —
     see near_dup_epoch) or None for an empty batch."""
-    if batch_df.isEmpty():
-        return None
     _stage = stage_meter(on_stage, epoch)
     spark = batch_df.sparkSession
     docs_table = f"{prefix}_docs"
@@ -159,11 +157,14 @@ def funnel_epoch(
             .drop("_c")
         )
     b = b.persist()
-    # ONE count per epoch: fills the persist, decides the exact-gate
-    # broadcast, and is the batch_rows_max bound near_dup_epoch uses
-    # to skip its own isEmpty probe + sets.count() guard job (two
-    # fewer Spark jobs per epoch — r13 VERDICT item 6).
+    # ONE count per epoch: fills the persist, is the epoch's only
+    # emptiness check, decides the exact-gate broadcast, and is the
+    # batch_rows_max bound near_dup_epoch uses to skip its own
+    # isEmpty probe + sets.count() guard job.
     n_b = b.count()
+    if n_b == 0:
+        b.unpersist()
+        return None
     _stage("prep")
     # exact-dedup increment: index min-id per UNSEEN content hash
     # (one doc per exact family ever reaches the near-dup state; the

@@ -92,8 +92,9 @@ def semi_prune_fused(
     multi-consumer callers (the cap guard's stats aggregate + tagged
     join + auto frame) read one materialization instead of
     re-deriving the scan+semi lineage per subtree. Use it when the
-    semi INPUT embeds per-row expansion work (phash/wide_fp probe a
-    4×-chunk Generate over the fingerprint store) and survivors are
+    semi INPUT embeds per-row expansion work (the phash/wide_fp
+    probe, wide_fp_stream.fp_probe_epoch, probes an n_chunks×
+    Generate over the fingerprint store) and survivors are
     match-bounded (small): measured at 2M-fp stores, epoch wall
     −23% (phash) / −25% (wide_fp) at 32 cores and −15% / −22% at 8
     cores, task-time −15% / −35% (BENCH_PROBE_SCALE.json). Do NOT
@@ -101,7 +102,15 @@ def semi_prune_fused(
     71.5M-row near-dup index the checkpoint write+barrier cost 1.7×
     the epoch wall at 32 idle cores (it only paid under 8-core
     saturation), so near_dup keeps the plain semi. Row-identical
-    either way (a checkpoint changes execution, never contents)."""
+    either way (a checkpoint changes execution, never contents).
+
+    Executor-loss caveat: a localCheckpoint truncates lineage and
+    keeps its blocks only on the executors that computed them, so
+    survivor blocks lost to an executor failure or a dynamic-
+    allocation decommission cannot be recomputed — the epoch fails
+    instead of recovering (restarting the drain from its checkpoint
+    redelivers the epoch, which replays idempotently). Long-running
+    drains on clusters with dynamic allocation are the exposed case."""
     k = F.xxhash64(*[F.col(c) for c in key_cols])
     pk = keys_src.select(k.alias("_pk")).distinct()
     if broadcast_probe:

@@ -7,7 +7,9 @@ ann_stream.py (embeddings): an image-corpus ingest keeps asking "is
 this NEW payload a near-duplicate of anything seen BEFORE?" —
 boilerplate logos, re-encoded mirrors, watermark variants. Per-batch
 work is one Arrow perceptual-hash pass over the batch plus a
-pigeonhole chunk join against the maintained fingerprint table:
+pigeonhole chunk join against the maintained fingerprint table — the
+fingerprint-probe epoch wide_fp_stream.fp_probe_epoch, shared with
+the 128-bit SimHash stream:
 
   state:  fp table (media_id, dhash64) — one 8-byte fingerprint per
           payload ever seen; the ONLY thing history contributes, so
@@ -16,9 +18,9 @@ pigeonhole chunk join against the maintained fingerprint table:
           decode, real dHash math) → 16-bit chunk keys for the batch
           AND for history (a map-only projection of the fp table) →
           join on (chunk, val), new-vs-history and new-vs-new →
-          exact Hamming verify ≤ k (recall-exact for k ≤ 3) → write
-          pairs + fingerprints into this epoch's ``_batch_id``
-          partitions.
+          exact Hamming verify ≤ k (recall-exact for k ≤ 3,
+          enforced) → write pairs + fingerprints into this epoch's
+          ``_batch_id`` partitions.
 
 Exactly-once via the shared epoch_write recipe (masked reads +
 per-epoch dynamic partition overwrite), and the fp table is eligible
@@ -33,39 +35,14 @@ from __future__ import annotations
 import functools
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from datasette_upload_csvs_spark.operators import dedup as _dedup
 from datasette_upload_csvs_spark.operators.multimodal import (
     perceptual_hashes,
 )
-from datasette_upload_csvs_spark.streaming.epoch_write import (
-    drain_epochs,
-    read_state,
-    write_epoch_partition,
+from datasette_upload_csvs_spark.streaming.epoch_write import drain_epochs
+from datasette_upload_csvs_spark.streaming.wide_fp_stream import (
+    fp_probe_epoch,
 )
-
-
-def _fp_chunks(fp: DataFrame, id_col: str = "media_id") -> DataFrame:
-    """(id, dhash64, chunk, val): the 4×16-bit pigeonhole keys — the
-    same bucketing dedup._fp_near_dup_pairs uses, map-only."""
-    return fp.select(
-        F.col(id_col),
-        F.col("dhash64"),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("chunk"),
-                        F.shiftrightunsigned(F.col("dhash64"), 16 * i)
-                        .bitwiseAND(F.lit(0xFFFF))
-                        .alias("val"),
-                    )
-                    for i in range(4)
-                ]
-            )
-        ).alias("cc"),
-    ).select(id_col, "dhash64", "cc.chunk", "cc.val")
 
 
 def phash_epoch(
@@ -83,7 +60,9 @@ def phash_epoch(
     invoke a single epoch directly. Exactly-once across both mutable
     stores under at-least-once redelivery (epoch_write recipe):
     history reads mask this epoch's own partition, writes are
-    per-epoch dynamic partition overwrites.
+    per-epoch dynamic partition overwrites. The probe is
+    wide_fp_stream.fp_probe_epoch over one 64-bit word in 4×16-bit
+    chunks, so max_hamming ≥ 4 (recall-lossy) raises ValueError.
 
     ``bucket_star_cap`` (default None = historical behavior): the
     joined-against side of both candidate joins has oversized
@@ -95,125 +74,20 @@ def phash_epoch(
 
     Returns ``{}`` for a processed batch, None for an empty one (the
     epoch-function contract epoch_write.drain_epochs counts by)."""
-    if batch_df.isEmpty():
-        return None
-    sp = batch_df.sparkSession
-    fp_new = perceptual_hashes(
-        batch_df, payload_col=payload_col, id_col=id_col
-    ).select(id_col, "dhash64").persist()
-    new_chunks = _fp_chunks(fp_new, id_col).persist()
-
-    cands = []
-    if sp.catalog.tableExists(fp_table):
-        # foreachBatch threads cache file listings — refresh or batch
-        # N joins against batch N-2's fingerprints (the stale-listing
-        # bug near_dup_epoch documents)
-        sp.catalog.refreshTable(fp_table)
-        # probe-bucket pruning (round-13, same move as
-        # near_dup_epoch): only history chunks sharing a (chunk,
-        # val) key with THIS batch can contribute a candidate —
-        # semi-reduce before the cap so the per-epoch shuffle is
-        # O(batch + matches), not O(history). 4 chunks per phash.
-        from datasette_upload_csvs_spark.streaming.near_dup_stream import (
-            _PROBE_KEY_BROADCAST_MAX,
-            semi_prune_fused,
-        )
-
-        # materialize=True (r15): the semi's input embeds the 4×
-        # chunk Generate over the fingerprint store, and the cap
-        # guard below re-derives that scan+expand per subtree (stats
-        # aggregate + tagged join); survivors are match-bounded, so
-        # one eager checkpoint computes the expansion once — epoch
-        # wall −23% at 32 cores / −15% at 8 on the 2M-fp leg
-        # (BENCH_PROBE_SCALE.json).
-        hist_chunks = _dedup.cap_bucket_side(
-            semi_prune_fused(
-                _fp_chunks(
-                    read_state(sp, fp_table, epoch).select(
-                        id_col, "dhash64"
-                    ),
-                    id_col,
-                ),
-                new_chunks,
-                ["chunk", "val"],
-                fp_new.count() * 4 <= _PROBE_KEY_BROADCAST_MAX,
-                materialize=True,
-            ),
-            ["chunk", "val"],
-            id_col,
-            bucket_star_cap,
-        )
-        cands.append(  # new vs history — direction normalized
-            new_chunks.select(
-                F.col(id_col).alias("id_n"),
-                F.col("dhash64").alias("fp_n"),
-                "chunk",
-                "val",
-            )
-            .join(
-                hist_chunks.select(
-                    F.col(id_col).alias("id_h"),
-                    F.col("dhash64").alias("fp_h"),
-                    "chunk",
-                    "val",
-                ),
-                ["chunk", "val"],
-            )
-            .select(
-                F.least("id_h", "id_n").alias("id_a"),
-                F.greatest("id_h", "id_n").alias("id_b"),
-                F.bit_count(
-                    F.col("fp_n").bitwiseXOR(F.col("fp_h"))
-                ).alias("hamming"),
-            )
-        )
-    a = new_chunks.select(
-        F.col(id_col).alias("id_a"), F.col("dhash64").alias("fp_a"),
-        "chunk", "val",
+    return fp_probe_epoch(
+        batch_df,
+        epoch,
+        functools.partial(
+            perceptual_hashes, payload_col=payload_col, id_col=id_col
+        ),
+        ("dhash64",),
+        pairs_table,
+        fp_table,
+        max_hamming,
+        4,
+        id_col,
+        bucket_star_cap,
     )
-    b = _dedup.cap_bucket_side(
-        new_chunks, ["chunk", "val"], id_col, bucket_star_cap
-    ).select(
-        F.col(id_col).alias("id_b"), F.col("dhash64").alias("fp_b"),
-        "chunk", "val",
-    )
-    nn = a.join(b, ["chunk", "val"])
-    if bucket_star_cap is None:
-        nn = nn.filter(F.col("id_a") < F.col("id_b")).select(
-            "id_a",
-            "id_b",
-            F.bit_count(F.col("fp_a").bitwiseXOR(F.col("fp_b"))).alias(
-                "hamming"
-            ),
-        )
-    else:
-        # right side is anchor-capped: a<b would drop every
-        # (member, anchor) star edge — normalize; distinct dedups
-        nn = nn.filter(F.col("id_a") != F.col("id_b")).select(
-            F.least("id_a", "id_b").alias("id_a"),
-            F.greatest("id_a", "id_b").alias("id_b"),
-            F.bit_count(F.col("fp_a").bitwiseXOR(F.col("fp_b"))).alias(
-                "hamming"
-            ),
-        )
-    cands.append(nn)  # new vs new
-    cand = cands[0]
-    for c in cands[1:]:
-        cand = cand.unionByName(c)
-    pairs = (
-        cand.distinct()
-        .filter(F.col("hamming") <= max_hamming)
-        .withColumn("_batch_id", F.lit(epoch))
-    )
-    # pairs write materializes BEFORE the fp append, so a crash
-    # between the two replays into masked reads + partition rewrite
-    write_epoch_partition(pairs, pairs_table)
-    write_epoch_partition(
-        fp_new.withColumn("_batch_id", F.lit(epoch)), fp_table
-    )
-    new_chunks.unpersist()
-    fp_new.unpersist()
-    return {}
 
 
 def maintain_phash_stream(

@@ -1,6 +1,8 @@
 """Incremental WIDE-fingerprint near-dup detection: the 128-bit
 SimHash tier (operators/dedup.simhash128 +
-fingerprint_hamming_pairs_wide) under a stream.
+fingerprint_hamming_pairs_wide) under a stream, and the one
+fingerprint-probe epoch (fp_probe_epoch) that it and
+streaming/phash_stream.py share.
 
 The scale-regime twin of streaming/phash_stream.py: a text-corpus
 ingest keeps asking "is this NEW document a near-duplicate of
@@ -19,6 +21,8 @@ incremental join buckets on 32-bit keys:
           n_chunks−1) → write pairs + fingerprints into this
           epoch's ``_batch_id`` partitions.
 
+Chunk keys, Hamming and the recall-radius rule are the batch
+operator's (dedup._fp_chunk_keys / _hamming / _check_fp_chunking).
 Exactly-once via the shared epoch_write recipe (masked reads +
 per-epoch dynamic partition overwrite); both state tables fold under
 ``compact_every``. Stream == batch pinned by
@@ -29,62 +33,145 @@ over the full corpus snapshot.
 from __future__ import annotations
 
 import functools
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from datasette_upload_csvs_spark.operators import dedup
+from datasette_upload_csvs_spark.operators.dedup import (
+    _check_fp_chunking,
+    _fp_chunk_keys,
+    _hamming,
+)
 from datasette_upload_csvs_spark.streaming.epoch_write import (
     drain_epochs,
     read_state,
     write_epoch_partition,
 )
+from datasette_upload_csvs_spark.streaming.near_dup_stream import (
+    _PROBE_KEY_BROADCAST_MAX,
+    semi_prune_fused,
+)
 
 FP_COLS = ("fp0", "fp1")
 
 
-def _wide_chunks(
-    fp: DataFrame, id_col: str, n_chunks: int = 4
-) -> DataFrame:
-    """(id, fp0, fp1, chunk, val): the multi-word pigeonhole keys —
-    the same slicing dedup._fp_near_dup_pairs uses (chunk i of word w
-    covers bits [bits·j, bits·(j+1)), j = i mod cpw), map-only."""
-    n_words = len(FP_COLS)
-    cpw = n_chunks // n_words
-    bits = 64 // cpw
-    mask = (1 << bits) - 1
+def fp_probe_epoch(
+    batch_df: DataFrame,
+    epoch: int,
+    fingerprint: Callable[[DataFrame], DataFrame],
+    fp_cols,
+    pairs_table: str,
+    fp_table: str,
+    max_hamming: int,
+    n_chunks: int,
+    id_col: str,
+    bucket_star_cap: int | str | None,
+) -> dict | None:
+    """One epoch of incremental fingerprint near-dup maintenance over
+    the pigeonhole chunk join: ``fingerprint`` maps the batch to
+    (id_col, *fp_cols) 64-bit words; new fingerprints are probed
+    against the maintained fp table (new-vs-history) and against
+    each other (new-vs-new), every candidate is exactly Hamming-
+    verified ≤ max_hamming, and pairs + fingerprints are written into
+    this epoch's ``_batch_id`` partitions (history reads mask it, so
+    a replayed epoch is idempotent). The chunking/radius rule is
+    checked first — max_hamming ≥ n_chunks would silently lose pairs.
 
-    def val(w, j):
-        if cpw == 1:
-            return F.col(FP_COLS[w])
-        return F.shiftrightunsigned(
-            F.col(FP_COLS[w]), bits * j
-        ).bitwiseAND(F.lit(mask))
+    ``bucket_star_cap``: see wide_fp_epoch. Returns ``{}`` for a
+    processed batch, None for an empty one (the epoch-function
+    contract epoch_write.drain_epochs counts by)."""
+    _check_fp_chunking(len(fp_cols), n_chunks, max_hamming)
+    if batch_df.isEmpty():
+        return None
+    sp = batch_df.sparkSession
+    keys = ["chunk", "val"]
+    fp_new = fingerprint(batch_df).select(id_col, *fp_cols).persist()
+    new_chunks = _fp_chunk_keys(fp_new, fp_cols, id_col, n_chunks).persist()
 
-    return fp.select(
-        F.col(id_col),
-        *[F.col(c) for c in FP_COLS],
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(w * cpw + j).alias("chunk"),
-                        val(w, j).alias("val"),
-                    )
-                    for w in range(len(FP_COLS))
-                    for j in range(cpw)
-                ]
+    def side(chunks: DataFrame, id_alias: str, prefix: str) -> DataFrame:
+        return chunks.select(
+            F.col(id_col).alias(id_alias),
+            *[F.col(c).alias(prefix + c) for c in fp_cols],
+            *keys,
+        )
+
+    cands = []
+    if sp.catalog.tableExists(fp_table):
+        # foreachBatch threads cache file listings — refresh or batch
+        # N joins against batch N-2's fingerprints (the stale-listing
+        # bug near_dup_epoch documents)
+        sp.catalog.refreshTable(fp_table)
+        # probe-bucket pruning: history chunks whose (chunk, val) key
+        # no batch row carries can never contribute a candidate —
+        # left-semi them away BEFORE the cap's groupBy, so the
+        # per-epoch shuffle is O(batch + matches), not O(history).
+        # The chunk expansion stays map-side over the fp scan;
+        # materialize=True computes it once for the cap guard's
+        # several consumers (see semi_prune_fused).
+        hist_chunks = dedup.cap_bucket_side(
+            semi_prune_fused(
+                _fp_chunk_keys(
+                    read_state(sp, fp_table, epoch), fp_cols, id_col,
+                    n_chunks,
+                ),
+                new_chunks,
+                keys,
+                fp_new.count() * n_chunks <= _PROBE_KEY_BROADCAST_MAX,
+                materialize=True,
+            ),
+            keys,
+            id_col,
+            bucket_star_cap,
+        )
+        cands.append(  # new vs history — direction normalized
+            side(new_chunks, "id_n", "n_")
+            .join(side(hist_chunks, "id_h", "h_"), keys)
+            .select(
+                F.least("id_h", "id_n").alias("id_a"),
+                F.greatest("id_h", "id_n").alias("id_b"),
+                _hamming(fp_cols, "n_", "h_").alias("hamming"),
             )
-        ).alias("cc"),
-    ).select(id_col, *FP_COLS, "cc.chunk", "cc.val")
-
-
-def _ham(prefix_a: str, prefix_b: str):
-    return F.bit_count(
-        F.col(f"{prefix_a}0").bitwiseXOR(F.col(f"{prefix_b}0"))
-    ) + F.bit_count(
-        F.col(f"{prefix_a}1").bitwiseXOR(F.col(f"{prefix_b}1"))
+        )
+    nn = side(new_chunks, "id_a", "a_").join(
+        side(
+            dedup.cap_bucket_side(new_chunks, keys, id_col, bucket_star_cap),
+            "id_b",
+            "b_",
+        ),
+        keys,
     )
+    ham = _hamming(fp_cols, "a_", "b_").alias("hamming")
+    if bucket_star_cap is None:
+        # symmetric self-join: a<b halves the mirror pairs up front
+        nn = nn.filter(F.col("id_a") < F.col("id_b")).select(
+            "id_a", "id_b", ham
+        )
+    else:
+        # right side is anchor-capped (asymmetric): an anchor is the
+        # bucket MIN, so a<b would drop every (member, anchor) star
+        # edge — normalize instead; the shared distinct dedups
+        nn = nn.filter(F.col("id_a") != F.col("id_b")).select(
+            F.least("id_a", "id_b").alias("id_a"),
+            F.greatest("id_a", "id_b").alias("id_b"),
+            ham,
+        )
+    cand = functools.reduce(DataFrame.unionByName, cands + [nn])
+    pairs = (
+        cand.distinct()
+        .filter(F.col("hamming") <= max_hamming)
+        .withColumn("_batch_id", F.lit(epoch))
+    )
+    # pairs write materializes BEFORE the fp append, so a crash
+    # between the two replays into masked reads + partition rewrite
+    write_epoch_partition(pairs, pairs_table)
+    write_epoch_partition(
+        fp_new.withColumn("_batch_id", F.lit(epoch)), fp_table
+    )
+    new_chunks.unpersist()
+    fp_new.unpersist()
+    return {}
 
 
 def wide_fp_epoch(
@@ -103,12 +190,10 @@ def wide_fp_epoch(
     factored out of the foreachBatch closure so the replay test can
     invoke a single epoch directly. Exactly-once across both mutable
     stores under at-least-once redelivery (epoch_write recipe).
-    Recall contract matches the batch operator: exact for
-    max_hamming ≤ n_chunks−1 (enforced), with the same n_chunks
-    validation as fingerprint_hamming_pairs_wide — an n_chunks that
-    is not a multiple of the word count would make _wide_chunks emit
-    FEWER chunks than nominal (n_chunks=3 → cpw=1 → 2 chunks) and
-    the nominal-count guard below would silently under-protect.
+    Recall contract and n_chunks validation match the batch operator
+    fingerprint_hamming_pairs_wide: n_chunks a multiple of the word
+    count with 1/2/4/8/16 chunks per word, exact for max_hamming ≤
+    n_chunks−1 (enforced).
 
     ``bucket_star_cap`` (default None = historical exact behavior):
     the joined-AGAINST side of both candidate joins (maintained
@@ -123,147 +208,18 @@ def wide_fp_epoch(
 
     Returns ``{}`` for a processed batch, None for an empty one (the
     epoch-function contract epoch_write.drain_epochs counts by)."""
-    n_words = len(FP_COLS)
-    if n_chunks % n_words != 0:
-        raise ValueError(
-            f"n_chunks={n_chunks} must be a multiple of the fingerprint "
-            f"word count {n_words}"
-        )
-    if (n_chunks // n_words) not in (1, 2, 4, 8, 16):
-        raise ValueError(
-            f"chunks-per-word must be one of 1/2/4/8/16, got "
-            f"{n_chunks // n_words}"
-        )
-    if max_hamming >= n_chunks:
-        raise ValueError(
-            f"max_hamming={max_hamming} with n_chunks={n_chunks} is "
-            "recall-LOSSY; raise n_chunks"
-        )
-    if batch_df.isEmpty():
-        return None
-    sp = batch_df.sparkSession
-    fp_new = (
-        dedup.simhash128(batch_df, text_col, id_col, portable=portable)
-        .select(id_col, *FP_COLS)
-        .persist()
+    return fp_probe_epoch(
+        batch_df,
+        epoch,
+        lambda b: dedup.simhash128(b, text_col, id_col, portable=portable),
+        FP_COLS,
+        pairs_table,
+        fp_table,
+        max_hamming,
+        n_chunks,
+        id_col,
+        bucket_star_cap,
     )
-    new_chunks = _wide_chunks(fp_new, id_col, n_chunks).persist()
-
-    cands = []
-    if sp.catalog.tableExists(fp_table):
-        # foreachBatch threads cache file listings — refresh or batch
-        # N joins against batch N-2's fingerprints (the stale-listing
-        # bug near_dup_epoch documents)
-        sp.catalog.refreshTable(fp_table)
-        # probe-bucket pruning (round-13, same move as
-        # near_dup_epoch): history chunks whose (chunk, val) key no
-        # batch row carries can never contribute a candidate —
-        # left-semi them away BEFORE the cap's groupBy, so the
-        # per-epoch shuffle is O(batch + matches), not O(history).
-        # The chunk expansion itself stays map-side over the fp
-        # scan. Hint-broadcast the batch's key set while bounded.
-        from datasette_upload_csvs_spark.streaming.near_dup_stream import (
-            _PROBE_KEY_BROADCAST_MAX,
-            semi_prune_fused,
-        )
-
-        # materialize=True (r15): the semi's input embeds the
-        # n_chunks× Generate over the fingerprint store, and the cap
-        # guard below re-derives that scan+expand per subtree;
-        # survivors are match-bounded, so one eager checkpoint
-        # computes the expansion once — epoch wall −25% at 32 cores
-        # / −22% at 8 on the 2M-fp leg (BENCH_PROBE_SCALE.json).
-        hist_chunks = dedup.cap_bucket_side(
-            semi_prune_fused(
-                _wide_chunks(
-                    read_state(sp, fp_table, epoch).select(
-                        id_col, *FP_COLS
-                    ),
-                    id_col,
-                    n_chunks,
-                ),
-                new_chunks,
-                ["chunk", "val"],
-                fp_new.count() * n_chunks <= _PROBE_KEY_BROADCAST_MAX,
-                materialize=True,
-            ),
-            ["chunk", "val"],
-            id_col,
-            bucket_star_cap,
-        )
-        cands.append(  # new vs history — direction normalized
-            new_chunks.select(
-                F.col(id_col).alias("id_n"),
-                F.col("fp0").alias("n0"),
-                F.col("fp1").alias("n1"),
-                "chunk",
-                "val",
-            )
-            .join(
-                hist_chunks.select(
-                    F.col(id_col).alias("id_h"),
-                    F.col("fp0").alias("h0"),
-                    F.col("fp1").alias("h1"),
-                    "chunk",
-                    "val",
-                ),
-                ["chunk", "val"],
-            )
-            .select(
-                F.least("id_h", "id_n").alias("id_a"),
-                F.greatest("id_h", "id_n").alias("id_b"),
-                _ham("n", "h").alias("hamming"),
-            )
-        )
-    a = new_chunks.select(
-        F.col(id_col).alias("id_a"),
-        F.col("fp0").alias("a0"),
-        F.col("fp1").alias("a1"),
-        "chunk",
-        "val",
-    )
-    b = dedup.cap_bucket_side(
-        new_chunks, ["chunk", "val"], id_col, bucket_star_cap
-    ).select(
-        F.col(id_col).alias("id_b"),
-        F.col("fp0").alias("b0"),
-        F.col("fp1").alias("b1"),
-        "chunk",
-        "val",
-    )
-    nn = a.join(b, ["chunk", "val"])
-    if bucket_star_cap is None:
-        # symmetric self-join: a<b halves the mirror pairs up front
-        nn = nn.filter(F.col("id_a") < F.col("id_b")).select(
-            "id_a", "id_b", _ham("a", "b").alias("hamming")
-        )
-    else:
-        # right side is anchor-capped (asymmetric): an anchor is the
-        # bucket MIN, so a<b would drop every (member, anchor) star
-        # edge — normalize instead; the shared distinct dedups
-        nn = nn.filter(F.col("id_a") != F.col("id_b")).select(
-            F.least("id_a", "id_b").alias("id_a"),
-            F.greatest("id_a", "id_b").alias("id_b"),
-            _ham("a", "b").alias("hamming"),
-        )
-    cands.append(nn)  # new vs new
-    cand = cands[0]
-    for c in cands[1:]:
-        cand = cand.unionByName(c)
-    pairs = (
-        cand.distinct()
-        .filter(F.col("hamming") <= max_hamming)
-        .withColumn("_batch_id", F.lit(epoch))
-    )
-    # pairs write materializes BEFORE the fp append, so a crash
-    # between the two replays into masked reads + partition rewrite
-    write_epoch_partition(pairs, pairs_table)
-    write_epoch_partition(
-        fp_new.withColumn("_batch_id", F.lit(epoch)), fp_table
-    )
-    new_chunks.unpersist()
-    fp_new.unpersist()
-    return {}
 
 
 def maintain_wide_fp_stream(

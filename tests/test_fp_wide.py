@@ -153,6 +153,18 @@ def test_narrow_lossy_validation(spark):
         fp, "dhash64", "media_id", max_hamming=4, n_chunks=4,
         allow_lossy=True,
     ).count() == 0
+    # n_chunks=1 keys on the whole word: exact at radius 0 only
+    assert dedup.fingerprint_hamming_pairs(
+        fp, "dhash64", "media_id", max_hamming=0, n_chunks=1
+    ).count() == 0
+    with pytest.raises(ValueError):
+        dedup.fingerprint_hamming_pairs(
+            fp, "dhash64", "media_id", max_hamming=1, n_chunks=1
+        )
+    with pytest.raises(ValueError):  # 3 chunks cannot split 64 bits
+        dedup.fingerprint_hamming_pairs(
+            fp, "dhash64", "media_id", max_hamming=1, n_chunks=3
+        )
 
 
 def test_simhash_pairs_lossy_validation(spark):
@@ -178,10 +190,13 @@ def test_simhash_pairs_lossy_validation(spark):
 
 def test_wide_fp_epoch_chunk_validation(spark, tmp_path):
     """r9 ADVICE (medium): wide_fp_epoch rejects n_chunks values
-    that would make _wide_chunks emit fewer chunks than nominal
-    (n_chunks=3 -> cpw=1 -> only 2 chunks actually emitted) instead
-    of silently losing recall against the nominal guard."""
-    from datasette_upload_csvs_spark.streaming import wide_fp_stream
+    that would make dedup._fp_chunk_keys emit fewer chunks than
+    nominal (n_chunks=3 -> cpw=1 -> only 2 chunks actually emitted)
+    instead of silently losing recall against the nominal guard."""
+    from datasette_upload_csvs_spark.streaming import (
+        phash_stream,
+        wide_fp_stream,
+    )
 
     docs = spark.createDataFrame(
         [(1, "alpha beta gamma")], "doc_id long, text string"
@@ -197,6 +212,16 @@ def test_wide_fp_epoch_chunk_validation(spark, tmp_path):
     with pytest.raises(ValueError):  # lossy radius still raises
         wide_fp_stream.wide_fp_epoch(
             docs, 0, "wfp_v_pairs", "wfp_v_fp", max_hamming=4, n_chunks=4
+        )
+    # phash shares the probe epoch: its fixed 4x16-bit chunking is
+    # recall-lossy from max_hamming=4 on
+    media = docs.select(
+        F.col("doc_id").alias("media_id"),
+        F.encode("text", "utf-8").alias("payload"),
+    )
+    with pytest.raises(ValueError):
+        phash_stream.phash_epoch(
+            media, 0, "ph_v_pairs", "ph_v_fp", max_hamming=4
         )
 
 

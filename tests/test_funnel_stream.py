@@ -17,6 +17,7 @@ from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
 from datasette_upload_csvs_spark.pipeline import run_curation_funnel
 from datasette_upload_csvs_spark.sources.parquet import read_table
 from datasette_upload_csvs_spark.streaming.funnel_stream import (
+    funnel_epoch,
     funnel_stream_stages,
     funnel_tables,
     run_curation_funnel_stream,
@@ -62,6 +63,11 @@ def _assert_stream_equals_batch(spark, corpus, benchmark, tmp_path,
     _land(corpus, "doc_id", 3, src, tmp_path, tag)
     _drop_state(spark)
     try:
+        # an empty batch is no epoch: None, and no state table made
+        assert funnel_epoch(corpus.limit(0), 0, PREFIX, None) is None
+        assert not any(
+            spark.catalog.tableExists(t) for t in funnel_tables(PREFIX)
+        )
         # count emptiness probes: the foreachBatch frame is a classic
         # DataFrame, so the patch must target that class
         with mock.patch.object(
@@ -81,7 +87,8 @@ def _assert_stream_equals_batch(spark, corpus, benchmark, tmp_path,
                 checkpoint_dir=str(tmp_path / f"ck_{tag}"),
             )
         assert n == 3
-        assert probe.call_count == 3  # one emptiness probe per epoch
+        # no emptiness probe: funnel_epoch's batch count decides it
+        assert probe.call_count == 0
         spark.catalog.clearCache()
         res = funnel_stream_stages(spark, PREFIX)
         want_counts, batch_stages, b_split, b_shards = _batch_funnel(

@@ -16,6 +16,7 @@ from datasette_upload_csvs_spark.operators import dedup, graph
 from datasette_upload_csvs_spark.streaming.near_dup_stream import (
     near_dup_epoch,
 )
+from datasette_upload_csvs_spark.streaming.phash_stream import phash_epoch
 from datasette_upload_csvs_spark.streaming.wide_fp_stream import (
     wide_fp_epoch,
 )
@@ -38,17 +39,27 @@ def _drop(spark, *tables):
         spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
-def _run_wide(spark, prefix, cap):
+def _phash_docs_epoch(batch, epoch, pairs_t, fp_t, bucket_star_cap):
+    """phash_epoch over the same docs, the text bytes as payload."""
+    return phash_epoch(
+        batch.withColumn("payload", F.encode("text", "utf-8")),
+        epoch, pairs_t, fp_t, id_col="doc_id",
+        bucket_star_cap=bucket_star_cap,
+    )
+
+
+def _run_wide(spark, prefix, cap, epoch_fn=wide_fp_epoch,
+              family_only=False):
     pairs_t, fp_t = f"{prefix}_pairs", f"{prefix}_fp"
     _drop(spark, pairs_t, fp_t)
     # epoch 0: 40-member exact-fp family + 5 unique docs
-    wide_fp_epoch(
+    epoch_fn(
         _epoch_docs(spark, list(range(40)) + list(range(90_000, 90_005)),
                     FAMILY_TEXT),
         0, pairs_t, fp_t, bucket_star_cap=cap,
     )
     # epoch 1: 10 more family members + 5 unique
-    wide_fp_epoch(
+    epoch_fn(
         _epoch_docs(
             spark,
             list(range(100, 110)) + list(range(90_005, 90_010)),
@@ -57,7 +68,9 @@ def _run_wide(spark, prefix, cap):
         1, pairs_t, fp_t, bucket_star_cap=cap,
     )
     out = spark.table(pairs_t).select("id_a", "id_b")
-    n = out.count()
+    n = (
+        out.filter(F.col("id_b") < 90_000) if family_only else out
+    ).count()
     comp = {
         r["vertex"]: r["component"]
         for r in graph.connected_components(out).collect()
@@ -72,6 +85,25 @@ def test_wide_fp_stream_cap_preserves_components(spark):
     # uncapped: C(40,2) + C(10,2) + 40*10 cross = 1225 family pairs
     assert n_uncapped == 1225
     # capped: anchor stars only — 39 + (10 history + 9 in-batch) = 58
+    assert n_capped == 58
+    assert comp_capped == comp_uncapped
+    fam = set(range(40)) | set(range(100, 110))
+    assert {comp_capped[v] for v in fam} == {0}
+    spark.catalog.clearCache()
+
+
+def test_phash_stream_cap_preserves_components(spark):
+    """The same family run through phash_epoch's bucket_star_cap
+    path (the shared fingerprint-probe epoch over one 64-bit word):
+    family-id pairs only, since unique payloads may land within the
+    perceptual-hash radius of each other."""
+    n_uncapped, comp_uncapped = _run_wide(
+        spark, "phcap_a", None, _phash_docs_epoch, family_only=True
+    )
+    n_capped, comp_capped = _run_wide(
+        spark, "phcap_b", 8, _phash_docs_epoch, family_only=True
+    )
+    assert n_uncapped == 1225
     assert n_capped == 58
     assert comp_capped == comp_uncapped
     fam = set(range(40)) | set(range(100, 110))
