@@ -171,15 +171,7 @@ def main() -> None:
 
     def lsh_candidates(docs, cap):
         sets = dedup._hash_shingle_frame(docs, "text", "doc_id", 3)
-        hashed = sets.select(
-            "doc_id",
-            F.explode(
-                F.transform(
-                    "sh", lambda h: F.pmod(h, F.lit(dedup._MERSENNE))
-                )
-            ).alias("h"),
-        )
-        sig = dedup._signatures_from_hashes(hashed, "doc_id", 128)
+        sig = dedup._signatures_from_hashes(sets, "doc_id", 128)
         return dedup.minhash_lsh_candidates(
             sig, "doc_id", bucket_star_cap=cap
         ).count()

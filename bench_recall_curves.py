@@ -75,8 +75,6 @@ def main() -> None:
     os.environ.setdefault("SPARK_GRAFT_CPUS", "32")
     n_pairs = int(sys.argv[1]) if len(sys.argv) > 1 else 4000
 
-    from pyspark.sql import functions as F
-
     from datasette_upload_csvs_spark.operators import dedup
     from datasette_upload_csvs_spark.session import get_spark
 
@@ -184,15 +182,7 @@ def main() -> None:
             rows.append((i + 1_000_000, " ".join(toks[:p] + fresh)))
         docs = spark.createDataFrame(rows, "doc_id long, text string")
         sets = dedup._hash_shingle_frame(docs, "text", "doc_id", 3)
-        hashed = sets.select(
-            "doc_id",
-            F.explode(
-                F.transform(
-                    "sh", lambda h: F.pmod(h, F.lit(dedup._MERSENNE))
-                )
-            ).alias("h"),
-        )
-        sig = dedup._signatures_from_hashes(hashed, "doc_id", 128)
+        sig = dedup._signatures_from_hashes(sets, "doc_id", 128)
         found = dedup.minhash_lsh_candidates(sig, "doc_id").collect()
         planted_found = sum(
             1 for r in found if r["id_b"] - r["id_a"] == 1_000_000

@@ -184,6 +184,16 @@ def _doclist_pair_structs(ds):
     )
 
 
+def _driver_gc(spark) -> None:
+    """Driver JVM GC, so ContextCleaner frees the shuffle files of
+    lineage that just became unreachable (the periodic GC outlives a
+    corpus-scale run). Best-effort: hygiene never fails the caller."""
+    try:
+        spark.sparkContext._jvm.System.gc()
+    except Exception:
+        pass
+
+
 # exact-dup collapse activates only past this many duplicated docs
 # (or 1% of the corpus, whichever is larger): below it the bucket
 # self-join's 32·Σg² work is bounded and the collapse's extra stages
@@ -538,10 +548,18 @@ def _perm_consts(num_perm: int) -> list[tuple[int, int]]:
 
 
 def _signatures_from_hashes(
-    hashed: DataFrame, id_col: str = "doc_id", num_perm: int = 128
+    sets: DataFrame, id_col: str = "doc_id", num_perm: int = 128
 ) -> DataFrame:
-    """Signatures from an exploded (id, h) relation of 31-bit shingle
-    hashes: one hash aggregation with num_perm codegen'd min states."""
+    """Signatures from an (id, sh array<long>) shingle-hash frame: the
+    hashes are folded to 31 bits (pmod _MERSENNE), exploded, and
+    reduced by one hash aggregation with num_perm codegen'd min
+    states. Shared by the batch operator and the near-dup stream."""
+    hashed = sets.select(
+        F.col(id_col),
+        F.explode(
+            F.transform("sh", lambda h: F.pmod(h, F.lit(_MERSENNE)))
+        ).alias("h"),
+    )
     mins, arr = _perm_min_exprs(num_perm)
     sig = hashed.groupBy(id_col).agg(*mins)
     return sig.select(F.col(id_col), arr.alias("signature"))
@@ -809,6 +827,24 @@ def cap_bucket_side(
     )
 
 
+def _band_keys(sig: DataFrame, id_col: str, n_bands: int, rows: int) -> DataFrame:
+    """(id, band, bucket) LSH keys: band i's bucket is xxhash64 over
+    signature slots [i·rows, (i+1)·rows) — pure codegen element_at
+    lookups. The one band layout of the batch banding, its "auto"
+    probe and the near-dup stream's maintained index."""
+    band_sql = "array(" + ",".join(
+        f"struct({i} AS band, xxhash64("
+        + ",".join(
+            f"element_at(signature, {i * rows + j + 1})" for j in range(rows)
+        )
+        + ") AS bucket)"
+        for i in range(n_bands)
+    ) + ")"
+    return sig.select(
+        id_col, F.explode(F.expr(band_sql)).alias("bb")
+    ).select(id_col, "bb.band", "bb.bucket")
+
+
 def minhash_lsh_candidates(
     sig: DataFrame,
     id_col: str = "doc_id",
@@ -913,23 +949,7 @@ def minhash_lsh_candidates(
     emitted. Template families fail the anchor verifies and cost
     K-1 rejected rows instead of C(K,2).
     """
-    # Multi-arg xxhash64 over element_at lookups: pure codegen, no
-    # interpreted slice/array_join per band.
-    def _band_rel(n_bands):
-        band_sql = "array(" + ",".join(
-            f"struct({i} AS band, xxhash64("
-            + ",".join(
-                f"element_at(signature, {i * rows + j + 1})"
-                for j in range(rows)
-            )
-            + ") AS bucket)"
-            for i in range(n_bands)
-        ) + ")"
-        return sig.select(
-            id_col, F.explode(F.expr(band_sql)).alias("bb")
-        ).select(id_col, "bb.band", "bb.bucket")
-
-    banded = _band_rel(bands)
+    banded = _band_keys(sig, id_col, bands, rows)
 
     def _finish(cand: DataFrame, cached: DataFrame | None) -> DataFrame:
         # scratch barrier (see docstring): candidates are 16 B/pair —
@@ -943,10 +963,7 @@ def minhash_lsh_candidates(
             cached.unpersist()
         if sig_cached is not None:
             sig_cached.unpersist()
-        try:
-            sig.sparkSession.sparkContext._jvm.System.gc()
-        except Exception:
-            pass  # storage hygiene must never fail the operator
+        _driver_gc(sig.sparkSession)
         return cand
 
     banded_cached = None
@@ -1010,7 +1027,7 @@ def minhash_lsh_candidates(
         if not (sig.storageLevel.useMemory or sig.storageLevel.useDisk):
             sig = sig_cached = sig.persist()
         row = (
-            _band_rel(n_probe)
+            _band_keys(sig, id_col, n_probe, rows)
             .groupBy("band", "bucket")
             .agg(F.count("*").alias("_bc"))
             .agg(
@@ -1093,6 +1110,60 @@ def minhash_lsh_candidates(
     )
     return _finish(
         small_pairs.unionByName(star_pairs).distinct(), banded
+    )
+
+
+def _low_df_pairs(
+    sets: DataFrame, id_col: str, max_df: int, scratch: bool = False
+) -> DataFrame:
+    """The MinHash low-df exact floor, shared by the batch operator and
+    the streaming funnel's fold: distinct (id_a < id_b) pairs sharing
+    ≥1 shingle hash with df in [2, max_df]. Count-first — a hot
+    shingle is dropped on counts alone, never building a doc-list —
+    then an AQE-broadcastable join back and a bounded C(df,2)
+    map-side expansion.
+
+    ``scratch`` (minhash_near_dup_pairs' scratch_checkpoints): the df
+    count and the doc-list join each exchange the exploded postings;
+    checkpointing the small low-df hash set between them (plus a
+    driver GC) frees the count's exchange before the join runs."""
+    ex = sets.select(F.col(id_col), F.explode("sh").alias("h64"))
+    dup_hashes = (
+        ex.groupBy("h64")
+        .agg(F.count("*").alias("df"))
+        .filter((F.col("df") >= 2) & (F.col("df") <= max_df))
+        .select("h64")
+    )
+    if scratch:
+        dup_hashes = dup_hashes.localCheckpoint(eager=True)
+        _driver_gc(sets.sparkSession)
+    grouped = ex.join(dup_hashes, "h64").groupBy("h64").agg(
+        F.collect_list(F.col(id_col)).alias("ds")
+    )
+    return (
+        grouped.select(F.explode(_doclist_pair_structs(F.col("ds"))).alias("p"))
+        .select("p.id_a", "p.id_b")
+        .distinct()
+    )
+
+
+def _jaccard_verify(
+    cand: DataFrame, sets: DataFrame, id_col: str, threshold: float
+) -> DataFrame:
+    """Exact-Jaccard verify of the MinHash family: (id_a, id_b, jaccard
+    = shared / (|a| + |b| − shared)) over the full (id, sh) hash sets,
+    kept where ≥ ``threshold``. O(candidates): each pair side joins
+    ``sets`` once (callers reduce ``sets`` to candidate ids first)."""
+    a = sets.select(F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a"))
+    b = sets.select(F.col(id_col).alias("id_b"), F.col("sh").alias("sh_b"))
+    shared = F.size(F.array_intersect("sh_a", "sh_b"))
+    denom = F.size("sh_a") + F.size("sh_b") - shared
+    return (
+        cand.join(a, "id_a")
+        .join(b, "id_b")
+        .withColumn("jaccard", shared.cast("double") / denom.cast("double"))
+        .filter(F.col("jaccard") >= threshold)
+        .select("id_a", "id_b", "jaccard")
     )
 
 
@@ -1303,12 +1374,6 @@ def minhash_near_dup_pairs(
             )
             rep_ids = groups.select(F.col("_rep").alias(id_col))
             sig_sets = sets.join(rep_ids, id_col, "left_semi")
-    hashed = sig_sets.select(
-        F.col(id_col),
-        F.explode(
-            F.transform("sh", lambda h: F.pmod(h, F.lit(_MERSENNE)))
-        ).alias("h"),
-    )
     # Materialize signatures once: the band explode references the
     # signature array 32× and the banded relation self-joins; persist
     # = compute once, reuse on both join sides. (oph_signatures is
@@ -1316,7 +1381,7 @@ def minhash_near_dup_pairs(
     # sf0.1 its two extra shuffle stages cost more than the 128×
     # arithmetic cut saves, so the codegen'd k-permutation agg wins
     # here; measured 1.4s vs 2.1s end-to-end.)
-    sig = _signatures_from_hashes(hashed, id_col, num_perm).persist()
+    sig = _signatures_from_hashes(sig_sets, id_col, num_perm).persist()
     cand = minhash_lsh_candidates(
         sig, id_col, bands, rows, bucket_star_cap=bucket_star_cap,
         scratch_checkpoints=scratch_checkpoints,
@@ -1327,46 +1392,12 @@ def minhash_near_dup_pairs(
         # barrier) — the signature cache has no further consumer
         sig.unpersist()
     if exact_floor_max_df is not None:
-        # deterministic floor: low-df shingle candidates from the
-        # persisted hash-set frame (full 64-bit hashes — the pmod'd
-        # `hashed` relation would alias distinct shingles at corpus
-        # scale and misclassify rare ones as hot). Count-first: df=1
-        # shingles generate no pair and df > cap shingles are the
-        # LSH-covered high-similarity regime, so the pair stage sees
-        # only the 2 ≤ df ≤ cap hashes — a hash-agg (a hot shingle
-        # is dropped on counts alone, never building a doc-list),
-        # an AQE-broadcastable join back, and a bounded C(df,2)
-        # map-side expansion.
-        ex = sets.select(F.col(id_col), F.explode("sh").alias("h64"))
-        dup_hashes = (
-            ex.groupBy("h64")
-            .agg(F.count("*").alias("df"))
-            .filter(
-                (F.col("df") >= 2) & (F.col("df") <= exact_floor_max_df)
-            )
-            .select("h64")
-        )
-        if scratch_checkpoints:
-            # phase the floor too: the df count and the doc-list join
-            # each exchange the full exploded-shingle relation (docs ×
-            # shingles rows); as ONE job their exchanges coexist —
-            # checkpoint the (small) low-df hash set between them so
-            # the count phase's exchange is collectable before the
-            # join phase runs
-            dup_hashes = dup_hashes.localCheckpoint(eager=True)
-            try:
-                docs.sparkSession.sparkContext._jvm.System.gc()
-            except Exception:
-                pass
-        grouped = ex.join(dup_hashes, "h64").groupBy("h64").agg(
-            F.collect_list(F.col(id_col)).alias("ds")
-        )
-        floor_cand = (
-            grouped.select(
-                F.explode(_doclist_pair_structs(F.col("ds"))).alias("p")
-            )
-            .select("p.id_a", "p.id_b")
-            .distinct()
+        # deterministic floor from the persisted hash-set frame (full
+        # 64-bit hashes — the signature stage's 31-bit fold would
+        # alias distinct shingles at corpus scale and misclassify
+        # rare ones as hot)
+        floor_cand = _low_df_pairs(
+            sets, id_col, exact_floor_max_df, scratch=scratch_checkpoints
         )
         if members is not None:
             # map the (member-level) floor pairs to rep pairs; the
@@ -1406,15 +1437,10 @@ def minhash_near_dup_pairs(
         # verify join runs (the LSH phase's exchanges were already
         # released inside minhash_lsh_candidates)
         cand = cand.localCheckpoint(eager=True)
-        try:
-            docs.sparkSession.sparkContext._jvm.System.gc()
-        except Exception:
-            pass  # storage hygiene must never fail the operator
-    # Verify ONLY the candidate pairs: join each side to its shingle
-    # set and intersect arrays. Cost is O(candidates), not O(pairs
-    # sharing a shingle) — the whole point of LSH at corpus scale.
-    # In collapsed mode candidates are REP pairs, so the expensive
-    # verify runs once per group pair, not once per member pair.
+        _driver_gc(docs.sparkSession)
+    # Verify ONLY the candidate pairs (_jaccard_verify). In collapsed
+    # mode candidates are REP pairs, so the expensive verify runs
+    # once per group pair, not once per member pair.
     #
     # Semi-reduce the shingle relation to PARTICIPATING docs first —
     # in scratch_checkpoints mode only (round-11 VERDICT item 5).
@@ -1448,17 +1474,7 @@ def minhash_near_dup_pairs(
         vsets = sets.join(pids, id_col, "left_semi")
     else:
         vsets = sets
-    a = vsets.select(F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a"))
-    b = vsets.select(F.col(id_col).alias("id_b"), F.col("sh").alias("sh_b"))
-    shared = F.size(F.array_intersect("sh_a", "sh_b"))
-    denom = F.size("sh_a") + F.size("sh_b") - shared
-    verified = (
-        cand.join(a, "id_a")
-        .join(b, "id_b")
-        .withColumn("jaccard", shared.cast("double") / denom.cast("double"))
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
+    verified = _jaccard_verify(cand, vsets, id_col, threshold)
     if members is None:
         return verified
     if pair_mode == "star":

@@ -34,26 +34,27 @@ _log = logging.getLogger(__name__)
 # by process restart). The release reaches through private plan APIs
 # (queryExecution().logical().rdd()); if a Spark version wraps the
 # checkpointed plan so that path breaks, release degrades to a no-op
-# and block storage accumulates per CC round — this counter (plus a
-# debug log line per failure) is the signal that the silent
-# degradation is happening, instead of rediscovering it as a
+# and block storage accumulates per CC round and funnel stage — this
+# counter (plus a debug log line per failure) is the signal that the
+# silent degradation is happening, instead of rediscovering it as a
 # disk-full at corpus scale.
 RELEASE_FAILURES = 0
 
 
-def _release_label_blocks(df: DataFrame, what: str) -> None:
+def _release_checkpoint_blocks(df: DataFrame, what: str) -> None:
     """Best-effort unpersist of a localCheckpoint frame's blocks.
     DataFrame.unpersist is a no-op for local checkpoints (they are
     not cacheManager entries); the blocks live on the checkpointed
-    RDD inside the logical plan. Never raises — storage hygiene must
-    never fail the labeling — but failures are counted + logged."""
+    RDD inside the logical plan (verified: getRDDStorageInfo drops to
+    zero). Never raises — storage hygiene must never fail the caller —
+    but failures are counted + logged."""
     global RELEASE_FAILURES
     try:
         df._jdf.queryExecution().logical().rdd().unpersist(False)
     except Exception as ex:
         RELEASE_FAILURES += 1
         _log.debug(
-            "connected_components: could not release %s blocks "
+            "could not release %s checkpoint blocks "
             "(plan shape changed under this Spark version?): %s",
             what, ex,
         )
@@ -203,7 +204,7 @@ def connected_components(
         and size_obs.get["id_bytes"] <= small_graph_id_bytes
     ):
         out = _driver_union_find(adj)
-        _release_label_blocks(adj, "adjacency")
+        _release_checkpoint_blocks(adj, "adjacency")
         return out
     # seed labels with the first propagation round folded in: the
     # min of the closed neighborhood costs the same shuffle a plain
@@ -260,17 +261,17 @@ def connected_components(
         ).localCheckpoint()
         # the superseded round's label blocks are dead weight the
         # moment the new checkpoint exists — release them
-        _release_label_blocks(labels, "superseded-round label")
+        _release_checkpoint_blocks(labels, "superseded-round label")
         labels = new_labels
         changed = obs.get["changed"]
         if changed == 0:
             break
 
-    _release_label_blocks(adj, "adjacency")
+    _release_checkpoint_blocks(adj, "adjacency")
     if changed is None or changed > 0:
         # converge-or-raise still must not leak: the final round's
         # label blocks are unreachable after the raise
-        _release_label_blocks(labels, "final-round label")
+        _release_checkpoint_blocks(labels, "final-round label")
         # the seed fold (above) is itself one propagation round, so
         # max_iter == 0 on a non-trivial graph is also unverified
         raise ConvergenceError(

@@ -66,6 +66,7 @@ from datasette_upload_csvs_spark.operators.dedup import (
     _count_prune,
     _doclist_pair_structs,
     _hash_shingle_frame,
+    _jaccard_verify,
 )
 from datasette_upload_csvs_spark.streaming.epoch_write import (
     BASE_EPOCH as _BASE,
@@ -451,22 +452,7 @@ class ShingleIndex:
         # from the one pruned scan; the final pair join moves only
         # batch-scale rows (it may shuffle — that is batch-keyed,
         # not corpus-keyed).
-        ja = pruned_sets.select(
-            F.col("doc_id").alias("id_a"), F.col("sh").alias("sh_a")
-        )
-        jb = pruned_sets.select(
-            F.col("doc_id").alias("id_b"), F.col("sh").alias("sh_b")
-        )
-        shared = F.size(F.array_intersect("sh_a", "sh_b"))
-        jac = shared.cast("double") / (
-            F.size("sh_a") + F.size("sh_b") - shared
-        ).cast("double")
-        return (
-            cand.join(ja, "id_a")
-            .join(jb, "id_b")
-            .select("id_a", "id_b", jac.alias("jaccard"))
-            .filter(F.col("jaccard") >= threshold)
-        )
+        return _jaccard_verify(cand, pruned_sets, "doc_id", threshold)
 
     # ----------------------------------------------------- compaction
     def compact(

@@ -18,7 +18,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from datasette_upload_csvs_spark.operators import curation, dedup, graph, textstats
@@ -143,7 +143,6 @@ def run_curation_funnel(
     run_stage=None,
     capture_plans: bool = False,
     release_stage_frames: bool = False,
-    auto_pair_budget: int | None = None,
 ) -> tuple[list[FunnelStage], DataFrame, DataFrame]:
     """The full curation funnel composed as a STAGED job graph:
 
@@ -153,10 +152,6 @@ def run_curation_funnel(
       train/val split → size-balanced shard export.
 
     Returns (stages, split_summary, shard_summary).
-
-    ``auto_pair_budget`` (None = the operator default) tunes the
-    bucket_star_cap="auto" regime boundary of the near-dup stage —
-    see dedup._auto_cap_frame's OUTPUT-CHANGE NOTE.
 
     Execution contract — what the per-component registry entries
     can't show and BENCH_FUNNEL_SCALE measures:
@@ -235,7 +230,9 @@ def run_curation_funnel(
         if release_stage_frames and stages:
             # the new stage's checkpoint is self-contained — the
             # previous stage's blocks are no longer reachable work
-            _release_checkpoint_blocks(stages[-1].frame)
+            graph._release_checkpoint_blocks(
+                stages[-1].frame, "funnel stage"
+            )
             stages[-1].frame = None
             # shuffle files behind the released stage are removed by
             # ContextCleaner only after a DRIVER GC collects their
@@ -245,7 +242,7 @@ def run_curation_funnel(
             # (observed: 5.76M-doc run filling an 80 GB disk). Force
             # the GC at the stage boundary — the one moment the
             # previous stage's lineage truly is garbage.
-            _trigger_context_cleaner(docs.sparkSession)
+            dedup._driver_gc(docs.sparkSession)
         stages.append(stage)
         return stage.frame
 
@@ -301,13 +298,6 @@ def run_curation_funnel(
             # release: both exist so corpus-scale runs have a
             # high-water mark of max-over-phases, not sum
             scratch_checkpoints=release_stage_frames,
-            # "auto" regime boundary, caller-tunable (ADVICE r12:
-            # clique consumers can restore the pre-r12 budget)
-            **(
-                {"auto_pair_budget": auto_pair_budget}
-                if auto_pair_budget is not None
-                else {}
-            ),
         ).select("id_a", "id_b")
         cc = graph.connected_components(pairs)
         labeled = s2.join(
@@ -401,32 +391,6 @@ def run_curation_funnel(
         F.sum("n_tok").alias("n_tokens"),
     )
     return stages, split_summary, shard_stage.frame
-
-
-def _release_checkpoint_blocks(frame: DataFrame | None) -> None:
-    """Free a localCheckpoint frame's persisted blocks. Dataset.
-    unpersist() only uncaches cacheManager entries, which a local
-    checkpoint is not — the storage lives on the checkpointed RDD
-    inside the LogicalRDD plan node, so that is what gets
-    unpersisted (verified: getRDDStorageInfo drops to zero)."""
-    if frame is None:
-        return
-    try:
-        frame._jdf.queryExecution().logical().rdd().unpersist(False)
-    except Exception:
-        # a non-checkpointed frame (no .rdd() on the node) — nothing
-        # to free; never let storage hygiene fail the pipeline
-        pass
-
-
-def _trigger_context_cleaner(spark: SparkSession) -> None:
-    """Run a JVM GC so ContextCleaner reclaims shuffle files whose
-    dependencies just became unreachable (see release path above).
-    Best-effort: storage hygiene must never fail the pipeline."""
-    try:
-        spark.sparkContext._jvm.System.gc()
-    except Exception:
-        pass
 
 
 def gopher_keep_expr(text_col: str = "text"):

@@ -285,6 +285,23 @@ def compact_state_table(
     return len(window)
 
 
+def _check_fold_schedule(
+    every: int | None, major_every: int | None, every_name: str
+) -> None:
+    """The fold-schedule rule of :func:`tiered_compact` and
+    :func:`drain_epochs`: majors need a minor cadence and must land on
+    one of its epochs (a multiple of it)."""
+    if major_every is None:
+        return
+    if not every:
+        raise ValueError(f"major_every requires {every_name}")
+    if major_every % every != 0:
+        raise ValueError(
+            f"major_every({major_every}) must be a multiple of "
+            f"{every_name}({every})"
+        )
+
+
 def tiered_compact(
     spark,
     table: str,
@@ -310,11 +327,7 @@ def tiered_compact(
     partitions folded (0 on off-schedule epochs)."""
     if minor_every < 1:
         raise ValueError(f"minor_every must be >= 1, got {minor_every}")
-    if major_every is not None and major_every % minor_every != 0:
-        raise ValueError(
-            f"major_every({major_every}) must be a multiple of "
-            f"minor_every({minor_every})"
-        )
+    _check_fold_schedule(minor_every, major_every, "minor_every")
     if epoch <= 0:
         return 0
     if major_every is not None and epoch % major_every == 0:
@@ -409,14 +422,7 @@ def drain_epochs(
     until the next scheduled fold (a minor window under
     ``tiered_compact`` until the next major, or forever without
     one), voiding the bounded-partition guarantee."""
-    if major_every is not None:
-        if not compact_every:
-            raise ValueError("major_every requires compact_every")
-        if major_every % compact_every != 0:
-            raise ValueError(
-                f"major_every({major_every}) must be a multiple of "
-                f"compact_every({compact_every})"
-            )
+    _check_fold_schedule(compact_every, major_every, "compact_every")
     processed = 0
 
     def sink(batch_df: DataFrame, epoch: int) -> None:
@@ -425,16 +431,10 @@ def drain_epochs(
             sp = batch_df.sparkSession
             mark = stage_meter(on_stage, epoch)
             for t in tables:
-                if major_every is not None:
-                    tiered_compact(
-                        sp,
-                        t,
-                        epoch,
-                        minor_every=compact_every,
-                        major_every=major_every,
-                    )
-                else:
-                    compact_state_table(sp, t, before_epoch=epoch)
+                # compact_every alone = majors on every minor epoch
+                tiered_compact(
+                    sp, t, epoch, compact_every, major_every or compact_every
+                )
                 mark(f"compact:{t}")
         if epoch_fn(batch_df, epoch) is not None:
             processed += 1

@@ -31,9 +31,9 @@ Architecture — what is incremental vs what is a fold:
     indexed earlier under the same hash has IDENTICAL text, so the
     maintained pairs translate 1:1 onto winners through the hash);
   - the deterministic low-df exact floor is completed at fold time
-    from the maintained __sets state (same df ∈ [2, max_df] recipe
-    as minhash_near_dup_pairs — df counted over one-doc-per-hash,
-    exactly the batch's post-exact-dedup relation);
+    from the maintained __sets state (minhash_near_dup_pairs' own
+    dedup._low_df_pairs and _jaccard_verify — df counted over
+    one-doc-per-hash, exactly the batch's post-exact-dedup relation);
   - connected components + canonical keep, decontam filter, the
     cluster-keyed split and balanced shards reuse the same operators
     the batch funnel calls.
@@ -70,7 +70,8 @@ from pyspark.sql import functions as F
 
 from datasette_upload_csvs_spark.operators import graph
 from datasette_upload_csvs_spark.operators.dedup import (
-    _doclist_pair_structs,
+    _jaccard_verify,
+    _low_df_pairs,
 )
 from datasette_upload_csvs_spark.pipeline import (
     _hashed_grams,
@@ -348,8 +349,8 @@ def funnel_stream_stages(
       the definition run_curation_funnel's md5 rank-1 window computes;
     * maintained pairs translate onto winners through the hash (the
       indexed doc and the winner carry identical text);
-    * the low-df exact floor (df ∈ [2, max_df], same recipe as
-      minhash_near_dup_pairs) is completed here from the __sets
+    * the low-df exact floor (df ∈ [2, max_df], the batch operator's
+      dedup._low_df_pairs) is completed here from the __sets
       state — df counted over one-doc-per-hash, exactly the batch's
       post-exact-dedup relation — then exact-verified;
     * CC + canonical keep, decontam flags, cluster-keyed split and
@@ -394,42 +395,10 @@ def funnel_stream_stages(
         sets = read_state(
             spark, f"{prefix}_index__sets", _NO_EPOCH
         ).select("doc_id", "sh")
-        ex = sets.select("doc_id", F.explode("sh").alias("h64"))
-        dup_hashes = (
-            ex.groupBy("h64")
-            .agg(F.count("*").alias("df"))
-            .filter(
-                (F.col("df") >= 2) & (F.col("df") <= exact_floor_max_df)
-            )
-            .select("h64")
-        )
-        grouped = ex.join(dup_hashes, "h64").groupBy("h64").agg(
-            F.collect_list("doc_id").alias("ds")
-        )
-        floor_cand = (
-            grouped.select(
-                F.explode(_doclist_pair_structs(F.col("ds"))).alias("p")
-            )
-            .select("p.id_a", "p.id_b")
-            .distinct()
-        )
-        sa = sets.select(
-            F.col("doc_id").alias("id_a"), F.col("sh").alias("sh_a")
-        )
-        sb = sets.select(
-            F.col("doc_id").alias("id_b"), F.col("sh").alias("sh_b")
-        )
-        shared = F.size(F.array_intersect("sh_a", "sh_b"))
-        denom = F.size("sh_a") + F.size("sh_b") - shared
-        floor_pairs = (
-            floor_cand.join(sa, "id_a")
-            .join(sb, "id_b")
-            .filter(
-                shared.cast("double") / denom.cast("double")
-                >= F.lit(threshold)
-            )
-            .select("id_a", "id_b")
-        )
+        floor_cand = _low_df_pairs(sets, "doc_id", exact_floor_max_df)
+        floor_pairs = _jaccard_verify(
+            floor_cand, sets, "doc_id", threshold
+        ).select("id_a", "id_b")
         pairs = pairs.unionByName(floor_pairs)
     pairs_w = (
         pairs.join(

@@ -31,9 +31,10 @@ from pyspark.sql import functions as F
 
 from datasette_upload_csvs_spark.operators.dedup import (
     cap_bucket_side,
+    _band_keys,
     _hash_shingle_frame,
+    _jaccard_verify,
     _signatures_from_hashes,
-    _MERSENNE,
 )
 from datasette_upload_csvs_spark.streaming.epoch_write import (
     drain_epochs,
@@ -41,18 +42,6 @@ from datasette_upload_csvs_spark.streaming.epoch_write import (
     stage_meter,
     write_epoch_partition,
 )
-
-
-def _bands(sig: DataFrame, bands: int, rows: int) -> DataFrame:
-    band_sql = "array(" + ",".join(
-        f"struct({i} AS band, xxhash64("
-        + ",".join(f"element_at(signature, {i * rows + j + 1})" for j in range(rows))
-        + ") AS bucket)"
-        for i in range(bands)
-    ) + ")"
-    return sig.select(
-        "doc_id", F.explode(F.expr(band_sql)).alias("bb")
-    ).select("doc_id", "bb.band", "bb.bucket")
 
 
 #: probe-key broadcast guard: the (band, bucket) key set of one
@@ -209,14 +198,8 @@ def near_dup_epoch(
     rows = num_perm // n_bands
     sets_table = f"{index_table}__sets"
     sets = _hash_shingle_frame(batch_df, "text", "doc_id", 3).persist()
-    hashed = sets.select(
-        "doc_id",
-        F.explode(
-            F.transform("sh", lambda h: F.pmod(h, F.lit(_MERSENNE)))
-        ).alias("h"),
-    )
-    sig = _signatures_from_hashes(hashed, "doc_id", num_perm)
-    new_bands = _bands(sig, n_bands, rows).persist()
+    sig = _signatures_from_hashes(sets, "doc_id", num_perm)
+    new_bands = _band_keys(sig, "doc_id", n_bands, rows).persist()
     if on_stage is not None:
         new_bands.count()
     _stage("nd_sig")
@@ -299,17 +282,7 @@ def near_dup_epoch(
         .distinct()
     )
     all_sets = all_sets.join(cand_ids, "doc_id", "left_semi")
-    a = all_sets.select(F.col("doc_id").alias("id_a"), F.col("sh").alias("sh_a"))
-    b = all_sets.select(F.col("doc_id").alias("id_b"), F.col("sh").alias("sh_b"))
-    shared = F.size(F.array_intersect("sh_a", "sh_b"))
-    denom = F.size("sh_a") + F.size("sh_b") - shared
-    pairs = (
-        cand.join(a, "id_a")
-        .join(b, "id_b")
-        .withColumn("jaccard", shared.cast("double") / denom.cast("double"))
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
+    pairs = _jaccard_verify(cand, all_sets, "doc_id", threshold)
     # The pairs write materializes its plan BEFORE the index/sets
     # writes mutate the tables that plan reads — keep this order.
     write_epoch_partition(

@@ -36,6 +36,7 @@ import functools
 
 from pyspark.sql import DataFrame, SparkSession
 
+from datasette_upload_csvs_spark.operators.dedup import _check_fp_chunking
 from datasette_upload_csvs_spark.operators.multimodal import (
     perceptual_hashes,
 )
@@ -43,6 +44,10 @@ from datasette_upload_csvs_spark.streaming.epoch_write import drain_epochs
 from datasette_upload_csvs_spark.streaming.wide_fp_stream import (
     fp_probe_epoch,
 )
+
+# the phash fingerprint: one 64-bit dHash word probed in 4×16-bit chunks
+_PHASH_COLS = ("dhash64",)
+_PHASH_CHUNKS = 4
 
 
 def phash_epoch(
@@ -80,11 +85,11 @@ def phash_epoch(
         functools.partial(
             perceptual_hashes, payload_col=payload_col, id_col=id_col
         ),
-        ("dhash64",),
+        _PHASH_COLS,
         pairs_table,
         fp_table,
         max_hamming,
-        4,
+        _PHASH_CHUNKS,
         id_col,
         bucket_star_cap,
     )
@@ -106,7 +111,9 @@ def maintain_phash_stream(
     Trigger.AvailableNow; returns micro-batches processed.
     Exactly-once via phash_epoch; ``checkpoint_dir`` and
     ``compact_every`` (both tables folded) are the shared drain's —
-    see epoch_write.drain_epochs."""
+    see epoch_write.drain_epochs. A lossy ``max_hamming`` raises
+    before the stream starts."""
+    _check_fp_chunking(len(_PHASH_COLS), _PHASH_CHUNKS, max_hamming)
     epoch_fn = functools.partial(
         phash_epoch,
         pairs_table=pairs_table,

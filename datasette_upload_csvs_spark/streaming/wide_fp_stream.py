@@ -242,7 +242,9 @@ def maintain_wide_fp_stream(
     Exactly-once via wide_fp_epoch; ``checkpoint_dir``,
     ``compact_every`` and ``major_every`` (both tables folded) are the
     shared drain's — see epoch_write.drain_epochs (``major_every``
-    selects the generational tiered_compact schedule)."""
+    selects the generational tiered_compact schedule). A bad
+    ``n_chunks``/``max_hamming`` raises before the stream starts."""
+    _check_fp_chunking(len(FP_COLS), n_chunks, max_hamming)
     epoch_fn = functools.partial(
         wide_fp_epoch,
         pairs_table=pairs_table,

@@ -56,13 +56,7 @@ def _template_docs(spark, n):
 
 def _sig(spark, docs):
     sets = dedup._hash_shingle_frame(docs, "text", "doc_id", 3)
-    hashed = sets.select(
-        "doc_id",
-        F.explode(
-            F.transform("sh", lambda h: F.pmod(h, F.lit(dedup._MERSENNE)))
-        ).alias("h"),
-    )
-    return dedup._signatures_from_hashes(hashed, "doc_id", 128).persist()
+    return dedup._signatures_from_hashes(sets, "doc_id", 128).persist()
 
 
 def test_cap_collapses_template_family_candidates(spark):
@@ -506,13 +500,7 @@ def test_auto_probe_rides_banded_persist(spark):
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     sets = dedup._hash_shingle_frame(docs, "text", "doc_id", 3)
-    hashed = sets.select(
-        "doc_id",
-        F.explode(
-            F.transform("sh", lambda h: F.pmod(h, F.lit(dedup._MERSENNE)))
-        ).alias("h"),
-    )
-    sig = dedup._signatures_from_hashes(hashed, "doc_id", 128)  # no persist
+    sig = dedup._signatures_from_hashes(sets, "doc_id", 128)  # no persist
     plan = (
         dedup.minhash_lsh_candidates(sig, "doc_id", bucket_star_cap="auto")
         ._jdf.queryExecution()

@@ -223,6 +223,21 @@ def test_wide_fp_epoch_chunk_validation(spark, tmp_path):
         phash_stream.phash_epoch(
             media, 0, "ph_v_pairs", "ph_v_fp", max_hamming=4
         )
+    # the drains apply the same rule before any query starts (the
+    # source does not exist, so a started stream would fail
+    # differently)
+    with pytest.raises(ValueError):
+        phash_stream.maintain_phash_stream(
+            spark, "/nonexistent", "media_id bigint, payload binary",
+            "ph_v_pairs", "ph_v_fp", max_hamming=4,
+        )
+    assert spark.streams.active == []
+    with pytest.raises(ValueError):
+        wide_fp_stream.maintain_wide_fp_stream(
+            spark, "/nonexistent", "doc_id bigint, text string",
+            "wfp_v_pairs", "wfp_v_fp", n_chunks=3,
+        )
+    assert spark.streams.active == []
 
 
 def test_fast_groups_contain_exact_dups(spark, sf_dir):
